@@ -33,12 +33,23 @@ Design notes (Spark-first, scale-first):
   `pydala/dataset.py:2122-2127`).
 - **Rewrites are partition-scoped or file-scoped**, never
   whole-dataset unless semantics demand it (global dedup / layout
-  change). Partition rewrites go through dynamic partition overwrite
-  (commit-time swap per partition); file-scoped rewrites append the
-  replacement files before deleting the replaced ones, the same
-  write-new-then-delete-old discipline as the reference
-  (`pydala/dataset.py:995-1003`) — readers pinned to the old file list
-  keep a consistent (stale) view, new readers see the compacted one.
+  change). Compaction (M1-M3) runs the package's one rewrite core, the
+  same one merge and row-level DML use: the plan names the files to
+  remove and the frame of new rows, ``plans.fs.staged_write`` writes
+  that frame once into a hidden staging dir and moves the files into
+  place, and the directory publisher (``operators.merge._rewrite_dir``)
+  deletes the replaced files last and checks they are gone — the
+  write-new-then-delete-old discipline of the reference
+  (`pydala/dataset.py:995-1003`). The manifest publisher of
+  ``plans/snapshots.py`` is the only other publish step.
+- **Failure contract**: a compaction that cannot finish raises
+  :class:`~pydala2_spark.errors.PartialMergeError`. Once the compacted
+  files are published, ``pending_deletes`` lists the replaced files
+  still on disk, and ``delete_paths(pending_deletes)`` completes the
+  compaction; a failure before that leaves nothing pending.
+- **Whole-dataset rewrites** (M4, z-order, M5) write a sibling staging
+  dir and swap it in with ``plans.fs.replace_dir`` (rollback if the
+  publish rename fails).
 """
 
 from __future__ import annotations
@@ -52,31 +63,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pydala2_spark.functions.sortspec import SortSpec, to_sort_columns
-from pydala2_spark.plans.fs import delete_paths, list_files, rename
+from pydala2_spark.operators.merge import _rewrite_dir
+from pydala2_spark.plans.fs import delete_paths, list_files, rename, replace_dir, write_parquet
 from pydala2_spark.plans.stats import collect_file_stats
 
 DEFAULT_MAX_ROWS_PER_FILE = 10_000_000  # reference default, pydala/dataset.py:2100
 
 
-def _publish_staging_swap(spark: SparkSession, path: str, staging: str) -> None:
-    """Atomically replace ``path`` with ``staging`` (rename old out of
-    the way, rename staging in, delete old) — and roll back if either
-    rename reports failure, so a half-swap can never leave readers
-    pointing at a missing dataset while the data sits in a side dir.
-    """
-    old = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    if not rename(spark, path, old):
-        delete_paths(spark, [staging])
-        raise IOError(f"staging swap: could not move {path!r} aside to {old!r}")
-    if not rename(spark, staging, path):
-        if not rename(spark, old, path):  # roll the original back in
-            raise IOError(
-                f"staging swap failed AND rollback failed: dataset is at "
-                f"{old!r}, replacement at {staging!r}, nothing at {path!r}"
-            )
-        delete_paths(spark, [staging])
-        raise IOError(f"staging swap: could not publish {staging!r} to {path!r}")
-    delete_paths(spark, [old])
+def _replace_dataset(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+    compression: str,
+    max_rows_per_file: int = DEFAULT_MAX_ROWS_PER_FILE,
+) -> None:
+    """Whole-dataset rewrite: write ``df`` into a sibling staging dir,
+    then swap it in with :func:`~pydala2_spark.plans.fs.replace_dir`."""
+    staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
+    write_parquet(df, staging, "overwrite", partition_by, compression, max_rows_per_file)
+    replace_dir(df.sparkSession, staging, path)
 
 
 class CompactionPlan:
@@ -87,10 +92,10 @@ class CompactionPlan:
     so a plan built from a candidates DataFrame stays LAZY: the frame
     is locally checkpointed at planning time (one distributed job —
     snapshot-consistent even after the compaction deletes the input
-    files), and the executing branches consume DataFrame forms
-    (``files`` — the flat list Spark's own FileIndex holds anyway;
-    ``pairs_df`` — the (file, group) mapping as a frame;
-    ``max_outputs_per_group`` — a one-row aggregate). The per-group
+    files), and the executing branches read the flat file list (the
+    list Spark's own FileIndex holds anyway) together with
+    ``max_outputs_per_group`` from ONE job over that frame, and
+    ``pairs_df`` — the (file, group) mapping as a frame. The per-group
     dicts materialize only when a caller actually reads ``.groups`` /
     ``.rows`` (dry-run inspection, tests); ``preview(limit)`` caps the
     collect for display at scale."""
@@ -147,11 +152,20 @@ class CompactionPlan:
 
     @property
     def files(self) -> list[str]:
+        return self._files_and_max_outputs(1)[0]
+
+    def _files_and_max_outputs(self, max_rows_per_file: int) -> tuple[list[str], int]:
+        """The flat file list (doubles as the emptiness check) and
+        :meth:`max_outputs_per_group` from ONE job over the lazy frame —
+        the per-group dicts stay unmaterialized."""
         if self._materialized:
-            return sorted(f for fs in self._groups.values() for f in fs)
-        return sorted(
-            r["f"] for r in self._df.select(F.explode("files").alias("f")).collect()
-        )
+            files = sorted(f for fs in self._groups.values() for f in fs)
+            return files, self.max_outputs_per_group(max_rows_per_file)
+        rows = self._df.select(
+            "files", F.ceil(F.col("rows") / F.lit(max_rows_per_file)).alias("n")
+        ).collect()
+        files = sorted(f for r in rows for f in r["files"])
+        return files, max([1] + [int(r["n"] or 1) for r in rows])
 
     def pairs_df(self) -> DataFrame:
         """(__file, __grp) rows as a DataFrame — the join side for
@@ -184,18 +198,6 @@ class CompactionPlan:
         if self._materialized:
             return bool(self._groups)
         return not self._df.isEmpty()
-
-
-def _partition_key(parts: dict[str, str]) -> str:
-    return "/".join(f"{k}={v}" for k, v in sorted(parts.items())) or "<root>"
-
-
-def _partition_filter(parts_key: str):
-    cond = F.lit(True)
-    for seg in parts_key.split("/"):
-        k, _, v = seg.partition("=")
-        cond = cond & (F.col(k).cast("string") == v)
-    return cond
 
 
 # ---------------------------------------------------------------------------
@@ -268,17 +270,16 @@ def compact_partitions(
     plan = plan_compact_partitions(spark, path, max_rows_per_file, sort_by)
     if dry_run:
         return plan
-    # one collect materializes the whole plan (groups + rows + files —
-    # same metadata scale as Spark's own FileIndex): every later probe
-    # (.files emptiness, .max_outputs_per_group, the fallback loop's
-    # .groups/.rows) is then a driver dict read instead of one Spark
-    # job each (r15, guide §1.2)
-    _ = plan.groups
-    all_files = plan.files
+    all_files, max_outputs = plan._files_and_max_outputs(max_rows_per_file)
     if not all_files:
         return plan
 
     part_cols = _discover_partition_cols(spark, path)
+    write = dict(
+        partition_by=part_cols or None,
+        compression=compression,
+        max_rows_per_file=max_rows_per_file,
+    )
     # Single-job fast path: when every group compacts to ONE output
     # file (true by construction for the default candidate rule —
     # rows < max_rows_per_file), all selected partitions rewrite in a
@@ -291,14 +292,7 @@ def compact_partitions(
     # write-new-then-delete-old discipline is unchanged, so concurrent
     # appends into the same partitions survive (dynamic partition
     # OVERWRITE would delete files the planning snapshot never saw).
-    # the aggregate only runs when the branch needs it (sorted rewrites
-    # never ask) — every plan probe here is one small job, not a
-    # per-group driver loop
-    if (
-        part_cols
-        and not sort_by
-        and plan.max_outputs_per_group(max_rows_per_file) == 1
-    ):
+    if part_cols and not sort_by and max_outputs == 1:
         df = spark.read.option("basePath", path).parquet(*all_files)
         if unique:
             # per-partition dedup semantics (the loop reads one
@@ -312,15 +306,8 @@ def compact_partitions(
                 if subset
                 else df.dropDuplicates()
             )
-        (
-            df.repartition(*[F.col(c) for c in part_cols])
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
-        delete_paths(spark, all_files)
+        df = df.repartition(*[F.col(c) for c in part_cols])
+        _rewrite_dir(path, df, all_files, "compact_partitions", **write)
         return plan
 
     # Single-job SORTED path: a sort_by rewrite selects EVERY partition
@@ -337,16 +324,8 @@ def compact_partitions(
         sort_cols = to_sort_columns(sort_by)
         df = spark.read.option("basePath", path).parquet(*all_files)
         range_cols = [F.col(c) for c in part_cols] + list(sort_cols)
-        (
-            df.repartitionByRange(*range_cols)
-            .sortWithinPartitions(*range_cols)
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
-        delete_paths(spark, all_files)
+        df = df.repartitionByRange(*range_cols).sortWithinPartitions(*range_cols)
+        _rewrite_dir(path, df, all_files, "compact_partitions", **write)
         return plan
 
     # precise fallback: per-group coalesce(n_out) file-count control
@@ -358,18 +337,8 @@ def compact_partitions(
             df = df.dropDuplicates(subset) if subset else df.dropDuplicates()
         if sort_by:
             df = df.sortWithinPartitions(*to_sort_columns(sort_by))
-        n_rows = plan.rows.get(key, 0)
-        n_out = max(1, math.ceil(n_rows / max_rows_per_file))
-        df = df.coalesce(n_out)
-        writer = (
-            df.write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-        )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(path)
-        delete_paths(spark, files)
+        n_out = max(1, math.ceil(plan.rows.get(key, 0) / max_rows_per_file))
+        _rewrite_dir(path, df.coalesce(n_out), files, "compact_partitions", **write)
     return plan
 
 
@@ -445,7 +414,8 @@ def plan_compact_by_timeperiod(
         )
         norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
         scanned = (
-            spark.read.parquet(*statless)
+            spark.read.option("basePath", path)
+            .parquet(*statless)
             .select(
                 F.input_file_name().alias("__f"),
                 F.col(timestamp_column).alias("__ts"),
@@ -491,17 +461,16 @@ def compact_by_timeperiod(
     plan = plan_compact_by_timeperiod(spark, path, interval, timestamp_column)
     if dry_run:
         return plan
-    # materialize the plan dicts with ONE collect: .files and
-    # .max_outputs_per_group below then run driver-side instead of one
-    # Spark job each (the flat file list was already being collected,
-    # so driver metadata scale is unchanged — r15, guide §1.2)
-    _ = plan.groups
-    all_files = plan.files  # flat list doubles as emptiness check
+    all_files, max_outputs = plan._files_and_max_outputs(max_rows_per_file)
     if not all_files:
         return plan
     part_cols = _discover_partition_cols(spark, path)
-    one_file_groups = plan.max_outputs_per_group(max_rows_per_file) == 1
-    if one_file_groups:
+    write = dict(
+        partition_by=part_cols or None,
+        compression=compression,
+        max_rows_per_file=max_rows_per_file,
+    )
+    if max_outputs == 1:
         # single-job fast path (round-3 verdict #4): rows rejoin their
         # file's interval bucket via input_file_name() against the
         # (file → group) map the planner already holds — a broadcast
@@ -528,32 +497,14 @@ def compact_by_timeperiod(
         df = df.repartition(
             F.col("__grp"), *[F.col(c) for c in part_cols]
         ).sortWithinPartitions(*to_sort_columns(sort_by or timestamp_column))
-        writer = (
-            df.drop("__grp")
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-        )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(path)
-        delete_paths(spark, all_files)
+        _rewrite_dir(path, df.drop("__grp"), all_files, "compact_by_timeperiod", **write)
         return plan
 
     for key, files in plan.groups.items():
         df = spark.read.option("basePath", path).parquet(*files)
         df = df.sortWithinPartitions(*to_sort_columns(sort_by or timestamp_column))
         n_out = max(1, math.ceil(plan.rows.get(key, 0) / max_rows_per_file))
-        writer = (
-            df.coalesce(n_out)
-            .write.mode("append")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
-        )
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(path)
-        delete_paths(spark, files)
+        _rewrite_dir(path, df.coalesce(n_out), files, "compact_by_timeperiod", **write)
     return plan
 
 
@@ -601,13 +552,14 @@ def compact_by_rows(
     df = df.repartition(n_target)
     if sort_by:
         df = df.sortWithinPartitions(*to_sort_columns(sort_by))
-    (
-        df.write.mode("append")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
-        .parquet(path)
+    _rewrite_dir(
+        path,
+        df,
+        files,
+        "compact_by_rows",
+        compression=compression,
+        max_rows_per_file=max_rows_per_file,
     )
-    delete_paths(spark, files)
     return plan
 
 
@@ -630,7 +582,8 @@ def repartition_dataset(
     (`pydala/dataset.py:2392-2488`). Missing partition columns that are
     date-parts (year/month/...) are derived from ``timestamp_column``.
 
-    The rewrite stages into a sibling directory and swaps via rename —
+    The rewrite stages into a sibling directory and swaps it in with
+    ``plans.fs.replace_dir`` —
     the whole-dataset analogue of the reference's per-file atomic swap
     (`pydala/schema.py:453-475`). Returns the new file list.
     """
@@ -658,17 +611,7 @@ def repartition_dataset(
     if sort_by:
         df = df.sortWithinPartitions(*to_sort_columns(sort_by))
 
-    staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    writer = (
-        df.write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
-    )
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-
-    _publish_staging_swap(spark, path, staging)
+    _replace_dataset(df, path, part_cols, compression, max_rows_per_file)
     return list_files(spark, path)
 
 
@@ -828,15 +771,7 @@ def zorder_rewrite(
     else:
         clustered = clustered.repartitionByRange(F.col("__z"))
     clustered = clustered.sortWithinPartitions("__z").drop("__z")
-
-    staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    (
-        clustered.write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
-        .parquet(staging)
-    )
-    _publish_staging_swap(spark, path, staging)
+    _replace_dataset(clustered, path, None, compression, max_rows_per_file)
     return list_files(spark, path)
 
 
@@ -866,13 +801,7 @@ def optimize_dtypes(
         return plan
 
     part_cols = _discover_partition_cols(spark, path)
-    out = apply_dtype_plan(df, plan)
-    staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    writer = out.write.mode("overwrite").option("compression", compression)
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-    _publish_staging_swap(spark, path, staging)
+    _replace_dataset(apply_dtype_plan(df, plan), path, part_cols, compression)
     return plan
 
 
@@ -948,7 +877,12 @@ def _discover_partition_cols(spark: SparkSession, path: str) -> list[str]:
     base = path if "://" in path else "file:" + os.path.abspath(path.removeprefix("file:"))
     if rel.startswith(base):
         rel = rel[len(base) :]
-    return [seg.split("=", 1)[0] for seg in rel.strip("/").split("/") if "=" in seg]
+    return _hive_partition_cols(rel)
+
+
+def _hive_partition_cols(rel: str) -> list[str]:
+    """Hive partition column names of one root-relative file path."""
+    return [seg.split("=", 1)[0] for seg in rel.strip("/").split("/")[:-1] if "=" in seg]
 
 
 def _first_timestamp_col(df: DataFrame) -> str | None:

@@ -23,11 +23,22 @@ Capability parity with ``ParquetDataset.merge`` in the reference
 Spark-first design (NOT the reference's pyarrow/duckdb transport): the
 match is a null-safe join (`<=>`); matched-file discovery uses the
 ``_metadata.file_path`` hidden column so the "which files hold these
-keys" probe is itself a distributed join; the rewrite job writes new
-files then deletes replaced ones via the Hadoop FileSystem API — the
-same code path works on file:// locally and s3a/hdfs on a cluster.
-At 100 TB an update touching 0.1% of keys rewrites only the matched
-files, not the dataset.
+keys" probe is itself a distributed join. At 100 TB an update touching
+0.1% of keys rewrites only the matched files, not the dataset.
+
+One rewrite core serves every file-selective mutation of both stacks —
+merge and ``delete_where`` / ``update_where`` here, compaction in
+``operators/maintenance.py``, commits and row-level DML of
+``plans/snapshots.py``: plan the files to remove and the frame of new
+rows (row-level DML of both stacks shares :func:`_rewrite_where`),
+write that frame once with ``plans.fs.staged_write`` (hidden staging
+dir, files renamed into place, exactly the added files returned), then
+publish. Only the publish step differs: the directory publisher
+(:func:`_rewrite_dir`) deletes the replaced files and checks they are
+gone; the manifest publisher (``SnapshotDataset._publish_rewrite``)
+commits parent − removed + added. All of it goes through the Hadoop
+FileSystem API — the same code path works on file:// locally and
+s3a/hdfs on a cluster.
 """
 
 from __future__ import annotations
@@ -362,7 +373,8 @@ def merge(
     compression: str = "zstd",
     max_rows_per_file: int = 10_000_000,
 ) -> MergeResult:
-    from pydala2_spark.plans.fs import delete_paths, list_files, path_exists
+    from pydala2_spark.operators.maintenance import _discover_partition_cols
+    from pydala2_spark.plans.fs import list_files, path_exists, staged_write
     from pydala2_spark.sources.writer import cast_to_schema
 
     if strategy not in VALID_STRATEGIES:
@@ -375,9 +387,9 @@ def merge(
     source_count = src.count()
 
     # one listing serves the existence check AND the pre-merge file
-    # set below — nothing writes to the target in between (r15: each
-    # Hadoop listing is ~0.1 s of driver fs round-trips; merge paid 6,
-    # needs 3)
+    # set below — nothing writes to the target in between, and every
+    # write reports its own files (each Hadoop listing is ~0.1 s of
+    # driver fs round-trips)
     files_at_entry = (
         list_files(spark, target_path) if path_exists(spark, target_path) else []
     )
@@ -385,7 +397,12 @@ def merge(
 
     # -- discover partitioning of an existing target (hive dirs) ---------
     if target_exists and not partition_by:
-        partition_by = _discover_partitions(spark, target_path) or None
+        partition_by = _discover_partition_cols(spark, target_path) or None
+    write = dict(
+        partition_by=partition_by,
+        compression=compression,
+        max_rows_per_file=max_rows_per_file,
+    )
 
     # -- missing / empty target: every strategy but update inserts all ---
     if not target_exists:
@@ -396,8 +413,7 @@ def merge(
         _validate_keys(keys, src_cols, "source")
         deduped = _dedup_last_wins(src, keys)
         result.inserted = deduped.count()
-        _append(deduped, target_path, partition_by, compression, max_rows_per_file)
-        result.inserted_files = list_files(spark, target_path)
+        result.inserted_files = staged_write(deduped, target_path, **write)
         result.target_count_after = result.inserted
         return result
 
@@ -411,7 +427,7 @@ def merge(
         target_count_after=target_count_before,
     )
     if source_count == 0:
-        result.preserved_files = list_files(spark, target_path)
+        result.preserved_files = files_at_entry
         return result
 
     keys = key_columns or [c for c in src_cols if c in target_cols]
@@ -455,9 +471,8 @@ def merge(
     # that set is bounded by the source batch (each key is a source
     # key), so the broadcast again stays on the small side — never on
     # the target, which can be arbitrarily large. localCheckpoint (not
-    # cache) pins the PRE-append listing: the appends below trigger
-    # refreshByPath, which would re-materialize a cached plan against
-    # the new file list and leak just-inserted keys into the match set.
+    # cache) pins the PRE-write match set: a cache can be re-planned
+    # against a refreshed file list and leak just-inserted keys into it.
     matched_keys = matched_target.select(*keys).distinct().localCheckpoint(eager=True)
     inserts = (
         deduped.join(
@@ -522,82 +537,37 @@ def merge(
     # included — plain appends can leave several rows per key) into one
     # source row, so the post-merge count must subtract what matched
     matched_target_rows = matched_target.count() if updated else 0
-
-    # the entry listing is still current: nothing has written to the
-    # target between the existence check and here
-    all_files_before = files_at_entry
+    result.updated, result.inserted = updated, inserted
 
     # Ordering matters: every plan below still READS the pre-merge file
-    # set (the DataFrame's FileIndex was pinned at load), so all appends
-    # happen first and the replaced files are deleted last. Any failure
-    # after the first append surfaces as PartialMergeError carrying the
-    # accumulated MergeResult + the not-yet-deleted files, so the caller
-    # can finish (or undo) the mutation deliberately.
+    # set (the DataFrame's FileIndex was pinned at load), so the inserts
+    # and the replacements land first and the replaced files are
+    # deleted last — by the rewrite core's directory publisher, whose
+    # PartialMergeError carries this MergeResult so far plus the
+    # not-yet-deleted files.
+    # -- rewrite matched files: (their unmatched rows) ∪ (matched source)
+    replacement = None
+    if updated and matched_files:
+        survivors = (
+            _filter_to_files(tagged, matched_files)
+            .join(_hint_small(src_keys, source_count), on=match_cond, how="left_anti")
+            .drop(_FILE)
+        )
+        replacement = survivors.unionByName(matched_source.select(*target_cols))
     try:
-        files_after_inserts = all_files_before
         if inserted:
-            _append(inserts.select(*target_cols), target_path, partition_by, compression, max_rows_per_file)
-            before = set(all_files_before)
-            files_after_inserts = list_files(spark, target_path)
-            result.inserted_files = [
-                f for f in files_after_inserts if f not in before
-            ]
-
-        # -- rewrite matched files: (their unmatched rows) ∪ (matched source)
-        if updated and matched_files:
-            survivors = (
-                _filter_to_files(tagged, matched_files)
-                .join(
-                    _hint_small(src_keys, source_count), on=match_cond, how="left_anti"
-                )
-                .drop(_FILE)
+            result.inserted_files = _rewrite_dir(
+                target_path, inserts.select(*target_cols), [], "merge", result, **write
             )
-            replacement = survivors.unionByName(matched_source.select(*target_cols))
-            _append(replacement, target_path, partition_by, compression, max_rows_per_file)
-            pre_rewrite = set(files_after_inserts)
-            result.rewritten_files = [
-                f for f in list_files(spark, target_path) if f not in pre_rewrite
-            ]
-            # fs.delete returning False is a SILENT failure mode: the
-            # replaced file would stay visible next to its replacement
-            # (duplicate rows) with no error. Verify and raise into the
-            # PartialMergeError contract with the precise leftover set.
-            if delete_paths(spark, matched_files) != len(matched_files):
-                still = [f for f in matched_files if path_exists(spark, f)]
-                if still:
-                    from pydala2_spark.errors import PartialMergeError
-
-                    result.updated = updated
-                    result.inserted = inserted
-                    raise PartialMergeError(
-                        f"merge rewrote {target_path!r} but {len(still)} replaced "
-                        f"file(s) could not be deleted",
-                        merge_result=result,
-                        pending_deletes=still,
-                    )
-    except Exception as e:
-        from pydala2_spark.errors import PartialMergeError
-
-        if isinstance(e, PartialMergeError):
-            raise
-        result.updated = updated
-        result.inserted = inserted
-        # replacements fully written but originals not removed → the
-        # recovery step is exactly "delete pending_deletes"; an earlier
-        # failure leaves nothing pending (Spark's committer stages job
-        # output in _temporary, so a failed append publishes no files)
-        raise PartialMergeError(
-            f"merge mutated {target_path!r} but failed before completing: {e}",
-            merge_result=result,
-            pending_deletes=matched_files if result.rewritten_files else [],
-        ) from e
+        if replacement is not None:
+            result.rewritten_files = _rewrite_dir(
+                target_path, replacement, matched_files, "merge", result, **write
+            )
     finally:
         deduped.unpersist()
 
-    result.updated = updated
-    result.inserted = inserted
     matched_set = set(matched_files)
-    result.preserved_files = [f for f in all_files_before if f not in matched_set]
+    result.preserved_files = [f for f in files_at_entry if f not in matched_set]
     result.target_count_after = (
         target_count_before - matched_target_rows + updated + inserted
     )
@@ -618,32 +588,134 @@ def _validate_keys(keys: list[str], cols: list[str], side: str) -> None:
         raise ValueError(f"key column(s) {missing} not present in {side} columns {cols}")
 
 
-def _append(
+def _rewrite_dir(
+    root: str,
     df: DataFrame,
-    path: str,
+    removed: list[str],
+    op: str,
+    result: MergeResult | None = None,
+    partition_by: list[str] | None = None,
+    compression: str = "zstd",
+    max_rows_per_file: int = 10_000_000,
+) -> list[str]:
+    """Stage ``df`` once into ``root``, then publish by deleting
+    ``removed`` — the directory publisher of the rewrite core (the
+    manifest publisher is ``SnapshotDataset._publish_rewrite``).
+    Returns the files the write added.
+
+    Replacements land BEFORE originals go, so a failure anywhere raises
+    :class:`~pydala2_spark.errors.PartialMergeError`. Once the write
+    has published, ``pending_deletes`` is what is still on disk of
+    ``removed`` and finishing the operation is exactly
+    ``delete_paths(pending_deletes)``; a failure before that leaves
+    nothing pending. ``delete_paths`` returning short is checked too:
+    a file that silently survives would stay visible beside its
+    rewrite. ``plans.fs`` functions resolve at call time."""
+    from pydala2_spark.errors import PartialMergeError
+    from pydala2_spark.plans import fs
+
+    added = None
+    try:
+        added = fs.staged_write(df, root, partition_by, compression, max_rows_per_file)
+        if removed and fs.delete_paths(df.sparkSession, removed) != len(removed):
+            still = [f for f in removed if fs.path_exists(df.sparkSession, f)]
+            if still:
+                raise PartialMergeError(
+                    f"{op} rewrote {root!r} but {len(still)} replaced "
+                    f"file(s) could not be deleted",
+                    merge_result=result,
+                    pending_deletes=still,
+                )
+    except PartialMergeError:
+        raise
+    except Exception as e:
+        raise PartialMergeError(
+            f"{op} mutated {root!r} but failed before completing: {e}",
+            merge_result=result,
+            pending_deletes=removed if added is not None else [],
+        ) from e
+    return added
+
+
+def _rewrite_where(
+    tagged: DataFrame, pred: Column, assigns: dict | None
+) -> tuple[list[str], int, DataFrame | None]:
+    """The row-level plan shared by both stacks' DELETE and UPDATE.
+
+    ``tagged`` carries each row's source file in ``_FILE`` (the plain
+    stack's ``_metadata.file_path``, the snapshot's root-relative
+    path); ``assigns`` is the SET map, ``None`` for a delete. ONE
+    pushed-down job yields the touched files and the matched row count
+    (per-file partial counts collapse map-side; min/max row-group
+    pruning skips clean files without reading data). The replacement
+    frame rewrites only the touched files: TRUE-predicate rows are
+    dropped (delete) or take the assignments, all evaluated against the
+    PRE-update row so a SET that swaps two columns stays correct; rows
+    where the predicate is FALSE or NULL pass through (SQL 3VL).
+    Returns ``(touched files, rows, replacement)``."""
+    cols = [c for c in tagged.columns if c != _FILE]
+    if assigns is not None:
+        missing = [c for c in assigns if c not in cols]
+        if missing:
+            raise ValueError(f"SET columns not in target: {missing}")
+    per_file = _delete_discovery(tagged, pred).groupBy(_FILE).count().collect()
+    files = sorted(r[_FILE] for r in per_file)
+    n_rows = int(sum(r["count"] for r in per_file))
+    if not files:
+        return [], 0, None
+    touched = _filter_to_files(tagged, files)
+    hit = F.coalesce(pred, F.lit(False))
+    if assigns is None:
+        return files, n_rows, touched.filter(~hit).select(*cols)
+    built = {c: (F.expr(e) if isinstance(e, str) else e) for c, e in assigns.items()}
+    return files, n_rows, touched.select(
+        *[F.when(hit, built[c]).otherwise(F.col(c)).alias(c) if c in built else F.col(c) for c in cols]
+    )
+
+
+def _mutate_dir(
+    spark: SparkSession,
+    target_path: str,
+    predicate: str | Column,
+    assigns: dict | None,
     partition_by: list[str] | None,
     compression: str,
     max_rows_per_file: int,
-) -> None:
-    writer = (
-        df.write.mode("append")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_rows_per_file))
+) -> tuple[int, dict]:
+    """Plain-directory DELETE/UPDATE: the shared row-level plan, one
+    staged write, the directory publisher. Returns the matched row
+    count and the file-list part of the result dict."""
+    from pydala2_spark.operators.maintenance import _discover_partition_cols
+    from pydala2_spark.plans.fs import list_files, path_exists
+
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    all_before = (
+        list_files(spark, target_path) if path_exists(spark, target_path) else []
     )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def _discover_partitions(spark: SparkSession, path: str) -> list[str]:
-    from pydala2_spark.plans.fs import list_files
-
-    for f in list_files(spark, path):
-        segs = f.split("/")[:-1]  # directory components only
-        names = [s.split("=", 1)[0] for s in segs if "=" in s]
-        if names:
-            return names
-    return []
+    files = {"matched_files": [], "rewritten_files": [], "preserved_files": all_before}
+    if not all_before:
+        return 0, files
+    if partition_by is None:
+        partition_by = _discover_partition_cols(spark, target_path) or None
+    target = spark.read.parquet(target_path)
+    tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
+    matched, n_rows, replacement = _rewrite_where(tagged, pred, assigns)
+    if not matched:
+        return 0, files
+    op = "delete_where" if assigns is None else "update_where"
+    files["rewritten_files"] = _rewrite_dir(
+        target_path,
+        replacement,
+        matched,
+        op,
+        partition_by=partition_by,
+        compression=compression,
+        max_rows_per_file=max_rows_per_file,
+    )
+    matched_set = set(matched)
+    files["matched_files"] = matched
+    files["preserved_files"] = [f for f in all_before if f not in matched_set]
+    return n_rows, files
 
 
 def delete_where(
@@ -666,7 +738,7 @@ def delete_where(
     their names — time travel over snapshots and downstream file-based
     caches stay valid for them.
 
-    Failure contract: replacements append BEFORE originals delete
+    Failure contract: replacements land BEFORE originals delete
     (same ordering as :func:`merge`); a failure in the window raises
     :class:`~pydala2_spark.errors.PartialMergeError` whose
     ``pending_deletes`` completes the operation.
@@ -681,87 +753,14 @@ def delete_where(
     ``deleted_rows``, ``rewritten_files``, ``preserved_files``,
     ``matched_files``.
     """
-    from pydala2_spark.plans.fs import delete_paths, list_files, path_exists
-
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    all_before = (
-        list_files(spark, target_path) if path_exists(spark, target_path) else []
+    n, files = _mutate_dir(
+        spark, target_path, predicate, None, partition_by, compression, max_rows_per_file
     )
-    if not all_before:
-        return {
-            "deleted_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": [],
-        }
-    if partition_by is None:
-        partition_by = _discover_partitions(spark, target_path) or None
-
-    target = spark.read.parquet(target_path)
-    tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
-    matched = _delete_discovery(tagged, pred)
-
-    # ONE job yields both the touched-file set and the row count
-    # (per-file partial counts collapse map-side; the predicate is
-    # pushed to the scan, so min/max row-group pruning skips clean
-    # files without reading data)
-    per_file = matched.groupBy(_FILE).count().collect()
-    matched_files = [r[_FILE] for r in per_file]
-    deleted_rows = int(sum(r["count"] for r in per_file))
-    if not matched_files:
-        return {
-            "deleted_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": all_before,
-        }
-
-    appended = False
-    try:
-        hit = F.coalesce(pred, F.lit(False))
-        survivors = _filter_to_files(tagged, matched_files).filter(
-            ~hit
-        ).drop(_FILE)
-        _append(survivors, target_path, partition_by, compression, max_rows_per_file)
-        appended = True
-        before = set(all_before)
-        rewritten = [f for f in list_files(spark, target_path) if f not in before]
-        if delete_paths(spark, matched_files) != len(matched_files):
-            still = [f for f in matched_files if path_exists(spark, f)]
-            if still:
-                from pydala2_spark.errors import PartialMergeError
-
-                raise PartialMergeError(
-                    f"delete_where rewrote {target_path!r} but {len(still)} "
-                    f"replaced file(s) could not be deleted",
-                    pending_deletes=still,
-                )
-    except Exception as e:
-        from pydala2_spark.errors import PartialMergeError
-
-        if isinstance(e, PartialMergeError):
-            raise
-        # replacements published → the recovery step is exactly
-        # "delete pending_deletes" (same contract as merge); a failed
-        # append publishes nothing (committer stages in _temporary),
-        # so nothing is pending then
-        raise PartialMergeError(
-            f"delete_where mutated {target_path!r} but failed before "
-            f"completing: {e}",
-            pending_deletes=matched_files if appended else [],
-        ) from e
-
-    matched_set = set(matched_files)
-    return {
-        "deleted_rows": deleted_rows,
-        "matched_files": matched_files,
-        "rewritten_files": rewritten,
-        "preserved_files": [f for f in all_before if f not in matched_set],
-    }
+    return {"deleted_rows": n, **files}
 
 
 def _delete_discovery(tagged: DataFrame, pred: Column) -> DataFrame:
-    """The touched-row frame ``delete_where`` scans: TRUE-only match
+    """The touched-row frame the row-level plan scans: TRUE-only match
     (coalesce keeps NULL-predicate rows alive) over the file-tagged
     target. Factored out so plan tests exercise the REAL discovery
     expression, not a re-implementation."""
@@ -789,7 +788,7 @@ def update_where(
     Only files CONTAINING a matching row rewrite; untouched files keep
     their names, so snapshots and file-based caches stay valid.
 
-    Failure contract: replacements append BEFORE originals delete; a
+    Failure contract: replacements land BEFORE originals delete; a
     failure in the window raises
     :class:`~pydala2_spark.errors.PartialMergeError` whose
     ``pending_deletes`` completes the operation.
@@ -804,90 +803,9 @@ def update_where(
     Returns ``updated_rows`` / ``matched_files`` / ``rewritten_files``
     / ``preserved_files``.
     """
-    from pydala2_spark.plans.fs import delete_paths, list_files, path_exists
-
     if not set:
         raise ValueError("update_where needs at least one SET assignment")
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    all_before = (
-        list_files(spark, target_path) if path_exists(spark, target_path) else []
+    n, files = _mutate_dir(
+        spark, target_path, predicate, set, partition_by, compression, max_rows_per_file
     )
-    if not all_before:
-        return {
-            "updated_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": [],
-        }
-    if partition_by is None:
-        partition_by = _discover_partitions(spark, target_path) or None
-
-    target = spark.read.parquet(target_path)
-    missing = [c for c in set if c not in target.columns]
-    if missing:
-        raise ValueError(f"SET columns not in target: {missing}")
-    tagged = target.withColumn(_FILE, F.col("_metadata.file_path"))
-    matched = _delete_discovery(tagged, pred)
-    per_file = matched.groupBy(_FILE).count().collect()
-    matched_files = [r[_FILE] for r in per_file]
-    updated_rows = int(sum(r["count"] for r in per_file))
-    if not matched_files:
-        return {
-            "updated_rows": 0,
-            "matched_files": [],
-            "rewritten_files": [],
-            "preserved_files": all_before,
-        }
-
-    appended = False
-    try:
-        hit = F.coalesce(pred, F.lit(False))
-        # all assignments evaluate against the PRE-update row: build
-        # every new value from the original columns, then project —
-        # a SET that swaps two columns stays correct
-        assigns = {
-            c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
-        }
-        cols = [
-            (
-                F.when(hit, assigns[c]).otherwise(F.col(c)).alias(c)
-                if c in assigns
-                else F.col(c)
-            )
-            for c in target.columns
-        ]
-        replacement = _filter_to_files(tagged, matched_files).select(*cols)
-        _append(
-            replacement, target_path, partition_by, compression, max_rows_per_file
-        )
-        appended = True
-        before = frozenset(all_before)
-        rewritten = [f for f in list_files(spark, target_path) if f not in before]
-        if delete_paths(spark, matched_files) != len(matched_files):
-            still = [f for f in matched_files if path_exists(spark, f)]
-            if still:
-                from pydala2_spark.errors import PartialMergeError
-
-                raise PartialMergeError(
-                    f"update_where rewrote {target_path!r} but {len(still)} "
-                    f"replaced file(s) could not be deleted",
-                    pending_deletes=still,
-                )
-    except Exception as e:
-        from pydala2_spark.errors import PartialMergeError
-
-        if isinstance(e, PartialMergeError):
-            raise
-        raise PartialMergeError(
-            f"update_where mutated {target_path!r} but failed before "
-            f"completing: {e}",
-            pending_deletes=matched_files if appended else [],
-        ) from e
-
-    matched_set = frozenset(matched_files)
-    return {
-        "updated_rows": updated_rows,
-        "matched_files": matched_files,
-        "rewritten_files": rewritten,
-        "preserved_files": [f for f in all_before if f not in matched_set],
-    }
+    return {"updated_rows": n, **files}

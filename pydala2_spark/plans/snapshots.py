@@ -11,18 +11,23 @@ Layout::
 
     <dataset>/part-*.parquet            data files (plain parquet layout)
     <dataset>/_snapshots/v00000001.json one manifest per committed version
-    <dataset>/_snapshots_stage/<token>/ per-commit staging (transient)
+    <dataset>/_staging_<token>/         per-write staging (transient)
 
-A commit writes its data files into a private staging directory,
-moves them into the dataset root (invisible to snapshot readers —
-they only follow manifests), then publishes a manifest via
-write-temp + atomic rename. Rename-to-existing fails on Hadoop
-filesystems, which gives optimistic concurrency for free: a commit
-that loses the race re-reads the new head, merges its (privately
-owned) files against the new parent, and retries the next version
-number. A crash at ANY point leaves every prior version readable;
-the only debris is orphaned data files, which ``vacuum`` removes
-because no manifest references them.
+Every write here runs the same rewrite core as the plain-directory
+stack (``operators/merge.py``): plan the files to remove and the frame
+of new rows (row-level DML shares ``merge._rewrite_where``), write that
+frame once through ``plans.fs.staged_write`` — private staging dir,
+then file names move into the root, invisible to snapshot readers
+because they only follow manifests — and publish. Only the publisher
+differs: where the directory stack deletes the removed files, this
+one commits ``parent − removed + added`` as the next manifest
+(:meth:`SnapshotDataset._publish_rewrite`) via write-temp + atomic
+rename. Rename-to-existing fails on Hadoop filesystems, which gives
+optimistic concurrency for free: a commit that loses the race
+re-reads the new head, merges its (privately owned) files against the
+new parent, and retries the next version number. A crash at ANY point
+leaves every prior version readable; the only debris is orphaned data
+files, which ``vacuum`` removes because no manifest references them.
 
 OBJECT STORES: the rename-based optimistic lock requires atomic
 fail-on-existing rename, which object stores do not provide (S3A
@@ -320,45 +325,68 @@ class SnapshotDataset:
 
     # -- commit -----------------------------------------------------------
 
-    def _stage_and_move(
+    def _publish_rewrite(
         self,
-        df: DataFrame,
-        partition_by: list[str] | None,
-        compression: str,
-        max_rows_per_file: int,
-    ) -> list[str]:
-        """Write ``df`` into a private staging dir, move the files into
-        the dataset root (names only — no data copy on a same-FS
-        rename), and return their root-relative paths. The files are
-        invisible to snapshot readers until a manifest references
-        them."""
-        from pydala2_spark.plans.fs import delete_paths, list_files, mkdirs, qualified, rename
+        operation: str,
+        head: int | None,
+        replaced: list[str],
+        added: list[str],
+        rebase: bool = True,
+        keep_parent: bool = True,
+        schema_json: str | None = None,
+        **fields,
+    ) -> dict | None:
+        """The manifest publisher of the rewrite core (the directory
+        publisher is ``operators.merge._rewrite_dir``): commit
+        ``parent − replaced + added`` as version ``head + 1``. ``added``
+        are the paths a staged write returned; ``keep_parent=False``
+        starts from an empty parent (overwrite). ``schema_json``
+        defaults to the parent's; ``fields`` are recorded verbatim.
 
-        stage = f"{self.path}/_snapshots_stage/{uuid.uuid4().hex}"
-        writer = (
-            df.write.mode("overwrite")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", str(max_rows_per_file))
+        Race rules: with ``rebase=False`` a lost race raises
+        :class:`SnapshotConflictError` (row-level DML — a blind retry
+        could resurrect rows a racing overwrite removed). With
+        ``rebase=True`` the publish re-reads the new head and retries
+        — but only while every ``replaced`` file is still referenced
+        there; a head that dropped any of them means the rewrite holds
+        rows that commit deleted, so it is abandoned: its files are
+        deleted and None is returned."""
+        from pydala2_spark.plans.fs import delete_paths, qualified
+
+        qroot = qualified(self.spark, self.path)
+        own = sorted(p[len(qroot) :].lstrip("/") for p in added)
+        gone = set(replaced)
+        for attempt in range(_MAX_COMMIT_RETRIES):
+            if attempt:
+                if not rebase:
+                    raise SnapshotConflictError(
+                        f"concurrent commit won version {(head or 0) + 1} at "
+                        f"{self.path!r} during row-level {operation}; re-run "
+                        f"against the new head (staged files are unreferenced "
+                        f"and will be vacuumed as orphans)"
+                    )
+                head = self.current_version()
+            parent = self._read_manifest(head) if head is not None else None
+            parent_files = set(parent["files"]) if parent and keep_parent else set()
+            if not gone <= parent_files:
+                delete_paths(self.spark, added)
+                return None
+            manifest = {
+                "version": (head or 0) + 1,
+                "parent": head,
+                "operation": operation,
+                "files": sorted((parent_files - gone) | set(own)),
+                "added": own,
+                "schema_json": schema_json or parent["schema_json"],
+                "ts": time.time(),
+                **fields,
+            }
+            if self._try_publish(manifest):
+                return manifest
+        raise SnapshotConflictError(
+            f"{operation} lost the manifest race {_MAX_COMMIT_RETRIES} times "
+            f"at {self.path!r}"
         )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(stage)
-
-        qstage = qualified(self.spark, stage)
-        own: list[str] = []
-        for f in list_files(self.spark, stage, suffixes=(".parquet",)):
-            qf = f if f.startswith(qstage) else qualified(self.spark, f)
-            rel = qf[len(qstage) :].lstrip("/")
-            dest = f"{self.path}/{rel}"
-            parent_dir = posixpath.dirname(dest)
-            if parent_dir != self.path:
-                mkdirs(self.spark, parent_dir)
-            if not rename(self.spark, f, dest):
-                delete_paths(self.spark, [stage])
-                raise IOError(f"could not move staged file into dataset: {rel}")
-            own.append(rel)
-        delete_paths(self.spark, [stage])
-        return own
 
     def commit(
         self,
@@ -377,33 +405,21 @@ class SnapshotDataset:
         caller metadata recorded verbatim in the manifest (e.g. a
         streaming batch id). Returns the published manifest.
         """
+        from pydala2_spark.plans.fs import staged_write
+
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         self._publish_guard()
 
-        own = self._stage_and_move(df, partition_by, compression, max_rows_per_file)
-        schema_json = df.schema.json()
-        for _ in range(_MAX_COMMIT_RETRIES):
-            head = self.current_version()
-            parent_files = (
-                self._read_manifest(head)["files"]
-                if (mode == "append" and head is not None)
-                else []
-            )
-            manifest = {
-                "version": (head or 0) + 1,
-                "parent": head,
-                "operation": mode,
-                "files": sorted(set(parent_files) | set(own)),
-                "added": sorted(own),
-                "schema_json": schema_json,
-                "ts": time.time(),
-                **({"extra": extra} if extra else {}),
-            }
-            if self._try_publish(manifest):
-                return manifest
-        raise SnapshotConflictError(
-            f"lost the manifest race {_MAX_COMMIT_RETRIES} times at {self.path!r}"
+        added = staged_write(df, self.path, partition_by, compression, max_rows_per_file)
+        return self._publish_rewrite(
+            mode,
+            self.current_version(),
+            [],
+            added,
+            keep_parent=mode == "append",
+            schema_json=df.schema.json(),
+            **({"extra": extra} if extra else {}),
         )
 
     def last_stream_batch(self, checkpoint_id: str) -> int | None:
@@ -449,7 +465,9 @@ class SnapshotDataset:
         compression: str = "zstd",
         max_rows_per_file: int = 10_000_000,
     ) -> dict:
-        """Shared DELETE/UPDATE core. 100 TB shape: one pushed-down
+        """Snapshot DELETE/UPDATE: the row-level plan shared with the
+        plain stack (``merge._rewrite_where``), one staged write, the
+        manifest publisher. 100 TB shape: one pushed-down
         discovery scan over the CURRENT version (min/max prunes clean
         files), one rewrite scan of only the matched files, one
         manifest publish. Cost scales with data under the predicate;
@@ -457,7 +475,8 @@ class SnapshotDataset:
         publish loses the optimistic race cleanly
         (SnapshotConflictError — re-run against the new head; blind
         retry could resurrect rows a racing overwrite removed)."""
-        from pydala2_spark.plans.fs import qualified, schemeless, schemeless_col
+        from pydala2_spark.operators.merge import _FILE, _rewrite_where
+        from pydala2_spark.plans.fs import qualified, schemeless, schemeless_col, staged_write
 
         self._publish_guard()
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -465,11 +484,6 @@ class SnapshotDataset:
         if head is None:
             raise ValueError(f"no snapshots at {self.path!r}")
         m = self._read_manifest(head)
-        df = self.read(head)
-        if assigns is not None:
-            missing = [c for c in assigns if c not in df.columns]
-            if missing:
-                raise ValueError(f"SET columns not in target: {missing}")
         # Root-relative spelling of each row's source file, derived
         # ONCE and used for BOTH discovery and touched-row selection
         # (a single expression cannot disagree with itself — a relative
@@ -481,80 +495,42 @@ class SnapshotDataset:
         # _metadata.file_path carries, so './', '//' and relative
         # spellings of self.path all land on the manifest's spelling.
         base = schemeless(qualified(self.spark, self.path)).rstrip("/") + "/"
-        tagged = df.withColumn("__f", F.col("_metadata.file_path")).withColumn(
-            "__rel",
+        tagged = self.read(head).withColumn(
+            _FILE,
             F.substring(
-                schemeless_col(F.col("__f")), len(base) + 1, 1 << 30
+                schemeless_col(F.col("_metadata.file_path")), len(base) + 1, 1 << 30
             ),
         )
-        hit = F.coalesce(pred, F.lit(False))
-        per_file = tagged.filter(hit).groupBy("__rel").count().collect()
-        matched_rel = sorted(r["__rel"] for r in per_file)
-        n_rows = int(sum(r["count"] for r in per_file))
+        matched_rel, n_rows, replacement = _rewrite_where(tagged, pred, assigns)
         if not matched_rel:
             return {"rows": 0, "matched_files": [], "version": head}
-
-        matched_set = set(matched_rel)
         # Belt-and-braces: every matched rel path must name a file the
         # current manifest actually tracks — if the base/rel derivation
         # ever drifts from the manifest spelling, refuse loudly instead
         # of publishing a version that drops files it failed to rewrite.
-        unknown = matched_set - set(m["files"])
+        unknown = set(matched_rel) - set(m["files"])
         if unknown:
             raise ValueError(
                 f"row-level mutation matched files the version-{head} "
                 f"manifest does not track (path normalization drift?): "
                 f"{sorted(unknown)[:5]}"
             )
-        # Touched-file selection over the SAME __rel column (IN literal
-        # while small, broadcast semi-join above the merge module's
-        # file-literal limit)
-        if len(matched_rel) <= 1000:
-            touched = tagged.filter(F.col("__rel").isin(matched_rel))
-        else:
-            keys = self.spark.createDataFrame(
-                [(r,) for r in matched_rel], "__rel string"
-            )
-            touched = tagged.join(F.broadcast(keys), "__rel", "left_semi")
-        if assigns is None:
-            replacement = touched.filter(~hit).drop("__f", "__rel")
-        else:
-            built = {
-                c: (F.expr(e) if isinstance(e, str) else e)
-                for c, e in assigns.items()
-            }
-            cols = [
-                (
-                    F.when(hit, built[c]).otherwise(F.col(c)).alias(c)
-                    if c in built
-                    else F.col(c)
-                )
-                for c in df.columns
-            ]
-            replacement = touched.select(*cols)
-        own = self._stage_and_move(
-            replacement, partition_by, compression, max_rows_per_file
+        if partition_by is None:  # rewrite into the table's own hive layout
+            from pydala2_spark.operators.maintenance import _hive_partition_cols
+
+            partition_by = _hive_partition_cols(matched_rel[0]) or None
+        added = staged_write(
+            replacement, self.path, partition_by, compression, max_rows_per_file
         )
-        manifest = {
-            "version": head + 1,
-            "parent": head,
-            "operation": "delete_where" if assigns is None else "update_where",
-            "files": sorted(
-                [f for f in m["files"] if f not in matched_set] + list(own)
-            ),
-            "added": sorted(own),
-            "removed": matched_rel,
-            "schema_json": m["schema_json"],
-            "ts": time.time(),
-        }
-        if not self._try_publish(manifest):
-            raise SnapshotConflictError(
-                f"concurrent commit won version {head + 1} at {self.path!r} "
-                f"during row-level {manifest['operation']}; re-run against "
-                f"the new head (staged files are unreferenced and will be "
-                f"vacuumed as orphans)"
-            )
-        return {"rows": n_rows, "matched_files": matched_rel, "version": head + 1}
+        manifest = self._publish_rewrite(
+            "delete_where" if assigns is None else "update_where",
+            head,
+            matched_rel,
+            added,
+            rebase=False,
+            removed=matched_rel,
+        )
+        return {"rows": n_rows, "matched_files": matched_rel, "version": manifest["version"]}
 
     # -- tags (named immutable versions) -----------------------------------
 
@@ -824,7 +800,7 @@ class SnapshotDataset:
         atomic publish. To recluster everything (not just small files)
         pass ``small_file_max_bytes`` larger than any file.
         """
-        from pydala2_spark.plans.fs import file_sizes, qualified
+        from pydala2_spark.plans.fs import file_sizes, qualified, staged_write
 
         self._publish_guard()
         head = self.current_version()
@@ -840,7 +816,6 @@ class SnapshotDataset:
         smalls = [f for f in m["files"] if rel_size.get(f, 0) <= small_file_max_bytes]
         if len(smalls) < 2:
             return None
-        survivors = [f for f in m["files"] if f not in set(smalls)]
 
         total = sum(rel_size.get(f, 0) for f in smalls)
         n_out = max(1, -(-total // target_file_bytes))  # ceil
@@ -849,7 +824,6 @@ class SnapshotDataset:
         )
         if cluster_by:
             from pydala2_spark.operators.maintenance import zorder_expr
-            from pyspark.sql import functions as F
 
             df = (
                 df.withColumn("__z", zorder_expr(df, list(cluster_by)))
@@ -859,40 +833,11 @@ class SnapshotDataset:
             )
         else:
             df = df.repartition(int(n_out))
-        own = self._stage_and_move(df, None, compression, 10_000_000)
-
-        schema_json = m["schema_json"]
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version()
-            if cur != head:
-                # another commit landed mid-compaction: keep its files,
-                # swap only small→compacted — but ONLY if every small
-                # file is still referenced by the new head. An
-                # overwrite (or a racing compact) that dropped any of
-                # them means our rewrite contains rows the new head
-                # deleted; publishing would resurrect them. Abandon:
-                # our moved files are unreferenced debris for vacuum.
-                latest = self._read_manifest(cur)
-                if not set(smalls) <= set(latest["files"]):
-                    from pydala2_spark.plans.fs import delete_paths
-
-                    delete_paths(self.spark, [f"{self.path}/{rel}" for rel in own])
-                    return None
-                survivors = [f for f in latest["files"] if f not in set(smalls)]
-                schema_json = latest["schema_json"]
-                head = cur
-            manifest = {
-                "version": (head or 0) + 1,
-                "parent": head,
-                "operation": "compact",
-                "files": sorted(set(survivors) | set(own)),
-                "added": sorted(own),
-                "schema_json": schema_json,
-                "ts": time.time(),
-            }
-            if self._try_publish(manifest):
-                return manifest
-        raise SnapshotConflictError(f"compact lost the manifest race at {self.path!r}")
+        # a racing commit that kept every small file is rebased onto;
+        # one that dropped any (an overwrite, a racing compact) would
+        # have the rewrite resurrect rows it deleted: abandon (None)
+        added = staged_write(df, self.path, None, compression, 10_000_000)
+        return self._publish_rewrite("compact", head, smalls, added)
 
     def file_stats(self, version: int | None = None):
         """Footer-only stats table over exactly one version's manifest

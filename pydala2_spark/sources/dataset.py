@@ -394,27 +394,38 @@ class BaseDataset:
         """
         from pydala2_spark.sources.writer import Writer
 
-        update_metadata = bool(kwargs.pop("update_metadata", False))
+        writer = Writer(self.spark, self.path, format=self.format)
+        self._write_through(
+            kwargs,
+            lambda: writer.write(
+                data,
+                mode=mode,
+                partition_by=kwargs.pop("partition_by", None) or self.partitioning or None,
+                timestamp_column=kwargs.pop("timestamp_column", None) or self.timestamp_column,
+                **kwargs,
+            ),
+        )
+
+    write = write_to_dataset
+
+    def _write_through(self, kw: dict, run):
+        """Run one mutation of the dataset's files, then drop the
+        cached DataFrame and — when ``kw`` carries
+        ``update_metadata=True`` (popped before ``run``) — fold the
+        touched files into the skipping sidecars. Returns ``run()``."""
+        update_metadata = bool(kw.pop("update_metadata", False))
         if update_metadata and self.format != "parquet":
             raise ValueError(
                 "update_metadata=True requires a parquet dataset (the "
                 f"skipping sidecars are parquet-footer-derived); format={self.format!r}"
             )
-        writer = Writer(self.spark, self.path, format=self.format)
-        writer.write(
-            data,
-            mode=mode,
-            partition_by=kwargs.pop("partition_by", None) or self.partitioning or None,
-            timestamp_column=kwargs.pop("timestamp_column", None) or self.timestamp_column,
-            **kwargs,
-        )
+        out = run()
         self.clear_cache()
         if update_metadata:
             from pydala2_spark.plans.analyze import refresh_metadata
 
             refresh_metadata(self.spark, self.path)
-
-    write = write_to_dataset
+        return out
 
     def vacuum(self) -> None:
         """Delete every data file of the dataset (`pydala/dataset.py:607-638`).
@@ -518,23 +529,20 @@ class ParquetDataset(BaseDataset):
         (added AND rewritten-away) into the existing skipping sidecars."""
         from pydala2_spark.operators.merge import merge as _merge
 
-        update_metadata = bool(kw.pop("update_metadata", False))
-        result = _merge(
-            self.spark,
-            target_path=self.path,
-            source=data,
-            strategy=strategy,
-            key_columns=key_columns,
-            partition_by=partition_by or self.partitioning or None,
-            **kw,
+        result = self._write_through(
+            kw,
+            lambda: _merge(
+                self.spark,
+                target_path=self.path,
+                source=data,
+                strategy=strategy,
+                key_columns=key_columns,
+                partition_by=partition_by or self.partitioning or None,
+                **kw,
+            ),
         )
         if partition_by and not self.partitioning:
             self.partitioning = list(partition_by)
-        self.clear_cache()
-        if update_metadata:
-            from pydala2_spark.plans.analyze import refresh_metadata
-
-            refresh_metadata(self.spark, self.path)
         return result
 
     def delete_where(self, predicate, **kw) -> dict:
@@ -545,20 +553,12 @@ class ParquetDataset(BaseDataset):
         skipping sidecars in the same call."""
         from pydala2_spark.operators.merge import delete_where as _dw
 
-        update_metadata = bool(kw.pop("update_metadata", False))
-        out = _dw(
-            self.spark,
-            self.path,
-            predicate,
-            partition_by=self.partitioning or None,
-            **kw,
+        return self._write_through(
+            kw,
+            lambda: _dw(
+                self.spark, self.path, predicate, partition_by=self.partitioning or None, **kw
+            ),
         )
-        self.clear_cache()
-        if update_metadata:
-            from pydala2_spark.plans.analyze import refresh_metadata
-
-            refresh_metadata(self.spark, self.path)
-        return out
 
     def update_where(self, predicate, set: dict, **kw) -> dict:
         """Row-level predicate UPDATE with file-selective rewrite —
@@ -569,21 +569,17 @@ class ParquetDataset(BaseDataset):
         skipping sidecars in the same call."""
         from pydala2_spark.operators.merge import update_where as _uw
 
-        update_metadata = bool(kw.pop("update_metadata", False))
-        out = _uw(
-            self.spark,
-            self.path,
-            predicate,
-            set=set,
-            partition_by=self.partitioning or None,
-            **kw,
+        return self._write_through(
+            kw,
+            lambda: _uw(
+                self.spark,
+                self.path,
+                predicate,
+                set=set,
+                partition_by=self.partitioning or None,
+                **kw,
+            ),
         )
-        self.clear_cache()
-        if update_metadata:
-            from pydala2_spark.plans.analyze import refresh_metadata
-
-            refresh_metadata(self.spark, self.path)
-        return out
 
     def refresh_metadata(self) -> dict:
         """Explicit sidecar sync — the same fused refresh that

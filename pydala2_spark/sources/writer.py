@@ -268,7 +268,7 @@ class Writer:
 
     def _append_staged(self, build) -> None:
         """Append = write to a hidden staging dir, then publish by
-        renaming files into place.
+        renaming files into place (:func:`~pydala2_spark.plans.fs.publish_staged`).
 
         The job commit and every publish step are rename-based, so a
         first attempt that dies mid-write leaves data only under
@@ -279,40 +279,18 @@ class Writer:
         where the rest still lives (reference contract,
         `pydala/io.py:41-55`).
         """
-        import uuid
+        from pydala2_spark.plans import fs
 
-        from pydala2_spark.errors import PartialWriteError
-        from pydala2_spark.plans.fs import delete_paths, list_files, mkdirs, rename
-
-        spark = self.spark
-        token = uuid.uuid4().hex[:12]
-        staging = f"{self.path.rstrip('/')}/_staging_{token}"
+        staging = fs.staging_dir(self.path)
         for attempt in (1, 2):
             try:
                 build("error").save(staging)
                 break
             except Exception:
-                delete_paths(spark, [staging])
+                fs.delete_paths(self.spark, [staging])
                 if attempt == 2:
                     raise
-        published: list[str] = []
-        sep = f"/_staging_{token}/"
-        try:
-            for f in list_files(spark, staging):
-                rel = f.split(sep, 1)[1]
-                dst = f"{self.path.rstrip('/')}/{rel}"
-                if "/" in rel:
-                    mkdirs(spark, dst.rsplit("/", 1)[0])
-                if not rename(spark, f, dst):
-                    raise IOError(f"rename failed: {f} -> {dst}")
-                published.append(dst)
-        except Exception as e:
-            raise PartialWriteError(
-                f"append to {self.path!r} failed during publish: {e}",
-                files=published,
-                staging_dir=staging,
-            ) from e
-        delete_paths(spark, [staging])
+        fs.publish_staged(self.spark, staging, self.path)
 
 
 # -- bucketed write (co-located joins) --------------------------------

@@ -468,6 +468,29 @@ def test_compact_by_timeperiod_mixed_stats_scans_only_statless(
     assert _snapshot(spark, tmp_ds_path) == before
 
 
+def test_compact_by_timeperiod_partitioned_by_its_timestamp_column(
+    spark, tmp_ds_path
+):
+    """A dataset hive-partitioned by its own timestamp column has no
+    footer stats for it (the value lives in the directory name), so
+    every file takes the data-scan fallback — which must read the
+    partition column back from the directories, not fail on it."""
+    from pydala2_spark.errors import MissingFooterStatsWarning
+
+    for day, seed in (("2024-01-01", 0), ("2024-01-01", 50), ("2024-02-05", 100)):
+        pdf = make_simple_pdf(20, seed=seed).drop(columns=["timestamp"])
+        pdf["day"] = day
+        spark.createDataFrame(pdf).withColumn("day", F.to_date("day")).repartition(
+            1
+        ).write.mode("append").partitionBy("day").parquet(tmp_ds_path)
+    before = _snapshot(spark, tmp_ds_path)
+    with pytest.warns(MissingFooterStatsWarning):
+        compact_by_timeperiod(spark, tmp_ds_path, "1d", "day")
+    files = list_files(spark, tmp_ds_path)
+    assert len(files) == 2 and sum("day=2024-01-01" in f for f in files) == 1
+    assert _snapshot(spark, tmp_ds_path) == before
+
+
 # -- M4 repartition ------------------------------------------------------
 
 
@@ -800,10 +823,10 @@ def test_zorder_expr_null_column_and_bits_clamp(spark):
 def test_staging_swap_rolls_back_on_publish_failure(spark, tmp_ds_path, monkeypatch):
     """If the staging->path rename fails, the original dataset must be
     rolled back into place and nothing deleted."""
-    import pydala2_spark.operators.maintenance as M
+    import pydala2_spark.plans.fs as fs
 
     spark.range(0, 100).write.parquet(tmp_ds_path)
-    real_rename = M.rename
+    real_rename = fs.rename
     calls = {"n": 0}
 
     def flaky_rename(spark_, src, dst):
@@ -812,11 +835,11 @@ def test_staging_swap_rolls_back_on_publish_failure(spark, tmp_ds_path, monkeypa
             return False
         return real_rename(spark_, src, dst)
 
-    monkeypatch.setattr(M, "rename", flaky_rename)
+    monkeypatch.setattr(fs, "rename", flaky_rename)
     import pytest as _pytest
 
     with _pytest.raises(IOError):
-        M._publish_staging_swap(spark, tmp_ds_path, tmp_ds_path + "__staging_x")
+        fs.replace_dir(spark, tmp_ds_path + "__staging_x", tmp_ds_path)
     monkeypatch.undo()
     # original data still fully readable at the original path
     assert spark.read.parquet(tmp_ds_path).count() == 100

@@ -221,6 +221,38 @@ def test_merge_source_families(spark, tmp_ds_path):
 
 # -- delete_where: row-level predicate delete (round 6) -----------------
 
+# the row-level DELETE/UPDATE semantics are written once and shared by
+# both mutation stacks; row assertions run against each
+STACKS = ["plain", "snapshot"]
+
+
+def _on_stack(spark, stack, path, frames, partition_by=None):
+    """Append ``frames`` to a table at ``path`` on one mutation stack —
+    a plain directory (``operators.merge``) or a ``SnapshotDataset`` —
+    and return its ``(delete_where, update_where, read)``. Results carry
+    the matched row count as ``rows`` on both stacks."""
+    from pydala2_spark.operators import merge as m
+    from pydala2_spark.plans.snapshots import SnapshotDataset
+
+    if stack == "snapshot":
+        ds = SnapshotDataset(spark, path)
+        for f in frames:
+            ds.commit(f, partition_by=partition_by)
+        return ds.delete_where, ds.update_where, ds.read
+    for f in frames:
+        w = f.write.mode("append")
+        (w.partitionBy(*partition_by) if partition_by else w).parquet(path)
+
+    def delete(pred):
+        out = m.delete_where(spark, path, pred)
+        return {"rows": out["deleted_rows"], **out}
+
+    def update(pred, set):
+        out = m.update_where(spark, path, pred, set=set)
+        return {"rows": out["updated_rows"], **out}
+
+    return delete, update, lambda: spark.read.parquet(path)
+
 
 def test_delete_where_file_selective(spark, tmp_path):
     """Only files containing matching rows rewrite; untouched files
@@ -249,18 +281,18 @@ def test_delete_where_file_selective(spark, tmp_path):
     assert preserved <= set(list_files(spark, p))
 
 
-def test_delete_where_null_predicate_rows_survive(spark, tmp_path):
+@pytest.mark.parametrize("stack", STACKS)
+def test_delete_where_null_predicate_rows_survive(spark, tmp_path, stack):
     """SQL DELETE three-valued logic: rows where the predicate is
     NULL are NOT deleted."""
-    from pydala2_spark.operators.merge import delete_where
-
     p = str(tmp_path / "ds")
-    spark.createDataFrame(
+    df = spark.createDataFrame(
         [(1, 5.0), (2, None), (3, 50.0)], "id long, v double"
-    ).repartition(1).write.parquet(p)
-    out = delete_where(spark, p, "v > 10")
-    assert out["deleted_rows"] == 1
-    left = {r["id"] for r in spark.read.parquet(p).collect()}
+    ).repartition(1)
+    delete, _, read = _on_stack(spark, stack, p, [df])
+    out = delete("v > 10")
+    assert out["rows"] == 1
+    left = {r["id"] for r in read().collect()}
     assert left == {1, 2}  # the NULL row survives
 
 
@@ -316,16 +348,31 @@ def test_delete_where_predicate_pushdown(spark, tmp_path):
     assert "PushedFilters: [" in plan and "id" in plan.split("PushedFilters:")[1][:120]
 
 
-def test_file_filter_broadcast_join_above_literal_limit(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("stack", STACKS)
+def test_file_filter_broadcast_join_above_literal_limit(spark, tmp_path, monkeypatch, stack):
     """Above _FILE_LITERAL_LIMIT the matched-file restriction switches
     from a driver-built IN literal to a broadcast semi-join: identical
     delete/merge semantics, and the physical plan carries a broadcast
     join instead of a file-list literal (a 10^5-file predicate at
     100 TB would otherwise be a multi-megabyte plan string)."""
     from pydala2_spark.operators import merge as m
-    from pydala2_spark.operators.merge import delete_where, merge
 
     monkeypatch.setattr(m, "_FILE_LITERAL_LIMIT", 0)  # force the join path
+
+    # delete_where end-to-end through the join path
+    p = str(tmp_path / "ds")
+    frames = [
+        spark.range(lo, lo + 50).selectExpr("id", "id % 7 AS grp").coalesce(1)
+        for lo in (0, 100, 200)
+    ]
+    delete, _, read = _on_stack(spark, stack, p, frames)
+    out = delete("id >= 100 AND id < 110")
+    assert out["rows"] == 10
+    after = read()
+    assert after.count() == 140
+    assert after.filter("id >= 100 AND id < 110").count() == 0
+    if stack == "snapshot":
+        return
 
     # the helper itself: no IN literal, broadcast join in the plan
     import pyspark.sql.functions as F
@@ -341,18 +388,6 @@ def test_file_filter_broadcast_join_above_literal_limit(spark, tmp_path, monkeyp
     assert files[0] not in plan  # file names are broadcast data, not plan text
     assert m._filter_to_files(tagged, files).count() == 100
 
-    # delete_where end-to-end through the join path
-    p = str(tmp_path / "ds")
-    for lo in (0, 100, 200):
-        spark.range(lo, lo + 50).selectExpr("id", "id % 7 AS grp").coalesce(
-            1
-        ).write.mode("append").parquet(p)
-    out = delete_where(spark, p, "id >= 100 AND id < 110")
-    assert out["deleted_rows"] == 10
-    after = spark.read.parquet(p)
-    assert after.count() == 140
-    assert after.filter("id >= 100 AND id < 110").count() == 0
-
     # merge upsert end-to-end through the join path
     p2 = str(tmp_path / "ds2")
     spark.range(0, 20).selectExpr("id", "id * 2 AS v").repartition(1).write.parquet(p2)
@@ -363,14 +398,13 @@ def test_file_filter_broadcast_join_above_literal_limit(spark, tmp_path, monkeyp
     assert got[15] == 1500 and got[24] == 2400 and got[0] == 0 and len(got) == 25
 
 
-def test_update_where_semantics_and_file_selectivity(spark, tmp_path):
+@pytest.mark.parametrize("stack", STACKS)
+def test_update_where_semantics_and_file_selectivity(spark, tmp_path, stack):
     """SET applies only to TRUE-predicate rows (NULL preserves); all
     assignments see the PRE-update row (swap stays correct); files
     without matches keep their names; SET validation raises."""
     import pytest
     from pyspark.sql import functions as F
-
-    from pydala2_spark.operators.merge import update_where
 
     path = str(tmp_path / "upd")
     rows = [
@@ -381,33 +415,34 @@ def test_update_where_semantics_and_file_selectivity(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "id long, x double, y double, g string")
     # one file per g-partition so selectivity is observable
-    df.repartition("g").write.partitionBy("g").parquet(path)
+    _, update, read = _on_stack(spark, stack, path, [df.repartition("g")], ["g"])
 
-    before = set(spark.read.parquet(path).select(
+    before = set(read().select(
         F.col("_metadata.file_path")).distinct().toPandas()["file_path"])
 
-    out = update_where(
-        spark, path, "x >= 20 AND g = 'a'",
-        set={"x": "y", "y": "x"},  # swap: both read pre-update values
+    out = update(
+        "x >= 20 AND g = 'a'",
+        {"x": "y", "y": "x"},  # swap: both read pre-update values
     )
-    assert out["updated_rows"] == 1
-    got = {r["id"]: (r["x"], r["y"]) for r in spark.read.parquet(path).collect()}
+    assert out["rows"] == 1
+    got = {r["id"]: (r["x"], r["y"]) for r in read().collect()}
     assert got[2] == (200.0, 20.0)      # swapped
     assert got[1] == (10.0, 100.0)      # untouched (pred false)
     assert got[3] == (None, 300.0)      # NULL predicate preserved
     assert got[4] == (40.0, 400.0)
 
-    after = set(spark.read.parquet(path).select(
+    after = set(read().select(
         F.col("_metadata.file_path")).distinct().toPandas()["file_path"])
     preserved_b = {f for f in before if "g=b" in f}
     assert preserved_b <= after  # b-partition files untouched
-    assert set(out["preserved_files"]) == {f for f in before if "g=b" in f}
+    if stack == "plain":
+        assert set(out["preserved_files"]) == {f for f in before if "g=b" in f}
 
     with pytest.raises(ValueError, match="SET columns"):
-        update_where(spark, path, "x > 0", set={"nope": "1"})
+        update("x > 0", {"nope": "1"})
     with pytest.raises(ValueError, match="SET assignment"):
-        update_where(spark, path, "x > 0", set={})
+        update("x > 0", {})
 
     # idempotence of a no-match predicate
-    out2 = update_where(spark, path, "x > 1e9", set={"x": "0.0"})
-    assert out2["updated_rows"] == 0 and out2["rewritten_files"] == []
+    out2 = update("x > 1e9", {"x": "0.0"})
+    assert out2["rows"] == 0 and out2.get("rewritten_files", []) == []

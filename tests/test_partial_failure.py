@@ -137,6 +137,35 @@ def test_merge_delete_failure_raises_partial_merge_error(
     assert read_rows(spark, tmp_ds_path, "id", "v") == [(1, "a"), (2, "B")]
 
 
+def test_compaction_silent_delete_failure_raises_partial_merge_error(
+    spark, tmp_ds_path, monkeypatch
+):
+    """A delete that reports success on nothing (returns 0, removes
+    nothing) must not leave the compacted rows visible beside the
+    files they replace: compaction raises PartialMergeError, and its
+    pending_deletes is exactly what completes the compaction."""
+    import pydala2_spark.plans.fs as fs_mod
+    from pydala2_spark.operators.maintenance import compact_by_rows
+
+    for lo in (0, 10, 20):
+        spark.range(lo, lo + 10).selectExpr("id", "id * 2 AS v").repartition(1).write.mode(
+            "append"
+        ).parquet(tmp_ds_path)
+    before = read_rows(spark, tmp_ds_path, "id", "v")
+    replaced = fs_mod.list_files(spark, tmp_ds_path)
+
+    orig = fs_mod.delete_paths
+    monkeypatch.setattr(fs_mod, "delete_paths", lambda spark_, paths: 0)
+    with pytest.raises(PartialMergeError) as ei:
+        compact_by_rows(spark, tmp_ds_path, max_rows_per_file=1000)
+    monkeypatch.undo()
+
+    assert sorted(ei.value.pending_deletes) == sorted(replaced)
+    orig(spark, ei.value.pending_deletes)
+    assert read_rows(spark, tmp_ds_path, "id", "v") == before
+    assert len(fs_mod.list_files(spark, tmp_ds_path)) == 1
+
+
 def test_merge_counts_with_duplicate_target_keys(spark, tmp_ds_path):
     """Plain appends can leave several target rows per key; the rewrite
     collapses them onto one source row, and target_count_after must
@@ -180,7 +209,7 @@ def test_staging_swap_rollback_when_publish_rename_fails(
     aside, staging not yet published): the swap must roll the original
     back in, delete the staging dir, and raise — readers never see a
     missing dataset."""
-    import pydala2_spark.operators.maintenance as m
+    import pydala2_spark.plans.fs as m
     from pydala2_spark.operators.maintenance import repartition_dataset
     from pydala2_spark.plans.fs import path_exists
 
@@ -219,7 +248,7 @@ def test_staging_swap_aborts_cleanly_when_aside_rename_fails(
 ):
     """Failure on the FIRST rename (dataset couldn't be moved aside):
     the original stays untouched and the staging dir is cleaned up."""
-    import pydala2_spark.operators.maintenance as m
+    import pydala2_spark.plans.fs as m
     from pydala2_spark.operators.maintenance import repartition_dataset
 
     spark.createDataFrame(
