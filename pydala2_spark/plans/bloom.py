@@ -29,11 +29,16 @@ driver:
   use case; screening one dataset against another at scale is a join
   (`operators/curate.py` decontamination), not a bloom probe.
 
-Conservative rules match `prune_files`: files missing from the
-sidecar (appended after the build) are always kept; a file whose
-column is entirely NULL cannot contain a (non-null) probe value and
-is prunable. The only driver-side materialization is the candidate
-FILE LIST — metadata-scale, one string per surviving file.
+Build and refresh are the one sidecar core of
+:mod:`pydala2_spark.plans.analyze` (a build is a refresh with no old
+sidecar). Membership is the one rule of every sidecar
+(:func:`pydala2_spark.plans.stats._known`): each indexed file has a
+sentinel row carrying its size in ``word``, and a file the sidecar
+does not know by path AND size (appended, or rewritten in place, since
+the build) is always kept. A file whose column is entirely NULL cannot
+contain a (non-null) probe value and is prunable. The only driver-side
+materialization is the candidate FILE LIST — metadata-scale, one
+string per surviving file.
 """
 
 from __future__ import annotations
@@ -47,10 +52,10 @@ from pydala2_spark.functions.safety import quote_identifier
 # file:///x — all sidecar paths are stored and compared scheme-free
 # through the package-wide rule in plans/fs.py
 from pydala2_spark.plans.fs import schemeless as _schemeless
-from pydala2_spark.plans.fs import schemeless_col as _schemeless_col
 
 #: sentinel word_index marking "this file was indexed" even when the
-#: indexed column held no non-null values in it.
+#: indexed column held no non-null values in it; its ``word`` is the
+#: file's size, the membership rule's second key.
 _SENTINEL = -1
 
 
@@ -83,6 +88,32 @@ def _position_words(df: DataFrame, value_col: str, num_bits: int, num_hashes: in
     )
 
 
+def _check_geometry(num_bits: int, num_hashes: int) -> None:
+    # an unvalidated num_hashes=0 sidecar would make every probe
+    # silently prune ALL files
+    if num_bits < 64 or num_bits & (num_bits - 1):
+        raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
+    if not 1 <= num_hashes <= 16:
+        raise ValueError(f"num_hashes must be in [1, 16], got {num_hashes}")
+
+
+def _sentinels(idx: DataFrame):
+    """``({file: recorded size}, (num_bits, num_hashes, value_type))``
+    from a sidecar's sentinel rows; ``({}, None)`` for an empty one."""
+    rows = (
+        idx.where(F.col("word_index") == _SENTINEL)
+        .select("file_path", "word", "num_bits", "num_hashes", "value_type")
+        .collect()
+    )
+    if not rows:
+        return {}, None
+    r = rows[0]
+    return (
+        {x["file_path"]: x["word"] for x in rows},
+        (int(r["num_bits"]), int(r["num_hashes"]), r["value_type"]),
+    )
+
+
 def build_bloom_index(
     spark: SparkSession,
     dataset_path: str,
@@ -102,54 +133,15 @@ def build_bloom_index(
 
     Returns ``{"files": n, "words": w}``.
     """
-    quote_identifier(column)  # raises on non-identifier names
-    if num_bits < 64 or num_bits & (num_bits - 1):
-        raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
-    if not 1 <= num_hashes <= 16:
-        raise ValueError(f"num_hashes must be in [1, 16], got {num_hashes}")
-    from pydala2_spark.plans.fs import list_files, qualified, replace_dir
+    from pydala2_spark.plans.analyze import _refresh
 
+    quote_identifier(column)  # raises on non-identifier names
+    _check_geometry(num_bits, num_hashes)
     path = dataset_path.rstrip("/")
     ipath = index_path or _bloom_sidecar_path(path, column)
-
-    df = spark.read.parquet(path)
-    value_type = df.schema[column].dataType.simpleString()
-    values = df.select(
-        _schemeless_col(F.input_file_name()).alias("file_path"),
-        F.col(column).alias("__v"),
-    ).where(F.col("__v").isNotNull())
-
-    words = (
-        _position_words(values, "__v", num_bits, num_hashes)
-        .groupBy("file_path", "word_index")
-        .agg(F.bit_or("word_bit").alias("word"))
-    )
-
-    # sentinel row per physical file: marks membership in the index so
-    # the probe can distinguish "indexed, value absent" (prunable) from
-    # "appended after build" (must keep). Metadata-scale.
-    files = [
-        _schemeless(qualified(spark, f))
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    ]
-    sentinels = spark.createDataFrame(
-        [(f, _SENTINEL, 0) for f in files], "file_path string, word_index long, word long"
-    )
-
-    out = (
-        words.unionByName(sentinels)
-        .withColumn("num_bits", F.lit(num_bits).cast("long"))
-        .withColumn("num_hashes", F.lit(num_hashes).cast("int"))
-        .withColumn("value_type", F.lit(value_type))
-    )
-
-    staging = f"{ipath}__staging"
-    out.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-
-    idx = spark.read.parquet(ipath)
-    n_words = idx.where(F.col("word_index") != _SENTINEL).count()
-    return {"files": len(files), "words": n_words}
+    out = _refresh(spark, path, bloom=[(column, ipath, (num_bits, num_hashes), True)])
+    n_words = spark.read.parquet(ipath).where(F.col("word_index") != _SENTINEL).count()
+    return {"files": out[f"bloom:{column}"]["total"], "words": n_words}
 
 
 def refresh_bloom_index(
@@ -159,73 +151,19 @@ def refresh_bloom_index(
     index_path: str | None = None,
 ) -> dict:
     """Incremental sidecar refresh (the ``StatsIndex.refresh``
-    discipline): hash ONLY files added since the build, drop rows of
-    removed files, keep everything else by name. After a 1 %-of-files
-    append, the refresh scans 1 % of the data — at millions of files
-    that is the difference between a usable index and a nightly
-    rebuild. Returns ``{"added": n, "removed": m, "total": k}``.
+    discipline, same core): hash ONLY files added or rewritten since
+    the build, drop rows of removed files, keep everything else. After
+    a 1 %-of-files append, the refresh scans 1 % of the data — at
+    millions of files that is the difference between a usable index
+    and a nightly rebuild. With no sidecar yet this is a build at the
+    default geometry. Returns ``{"added": n, "removed": m, "total": k}``.
     """
-    quote_identifier(column)
-    from pydala2_spark.plans.fs import list_files, path_exists, qualified, replace_dir
+    from pydala2_spark.plans.analyze import _refresh
 
     path = dataset_path.rstrip("/")
     ipath = index_path or _bloom_sidecar_path(path, column)
-    if not path_exists(spark, ipath):
-        out = build_bloom_index(spark, path, column, index_path=index_path)
-        return {"added": out["files"], "removed": 0, "total": out["files"]}
-
-    old = spark.read.parquet(ipath)
-    first = old.select("num_bits", "num_hashes", "value_type").first()
-    num_bits, num_hashes, value_type = (
-        int(first["num_bits"]),
-        int(first["num_hashes"]),
-        first["value_type"],
-    )
-    indexed = {r["file_path"] for r in old.select("file_path").distinct().collect()}
-    current = {
-        _schemeless(qualified(spark, f)): f
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    }
-    added = sorted(key for key in current if key not in indexed)
-    removed = indexed - set(current)
-
-    parts = [old.filter(~F.col("file_path").isin(list(removed)) if removed else F.lit(True))]
-    if added:
-        values = (
-            spark.read.parquet(*[current[k] for k in added])
-            .select(
-                _schemeless_col(F.input_file_name()).alias("file_path"),
-                # xxhash64 is TYPE-sensitive: cast to the sidecar's
-                # stored type so schema drift in appended files (int32
-                # vs the indexed bigint) cannot silently diverge the
-                # hash family from the probe side
-                F.col(column).cast(value_type).alias("__v"),
-            )
-            .where(F.col("__v").isNotNull())
-        )
-        words = (
-            _position_words(values, "__v", num_bits, num_hashes)
-            .groupBy("file_path", "word_index")
-            .agg(F.bit_or("word_bit").alias("word"))
-        )
-        sentinels = spark.createDataFrame(
-            [(k, _SENTINEL, 0) for k in added],
-            "file_path string, word_index long, word long",
-        )
-        parts.append(
-            words.unionByName(sentinels)
-            .withColumn("num_bits", F.lit(num_bits).cast("long"))
-            .withColumn("num_hashes", F.lit(num_hashes).cast("int"))
-            .withColumn("value_type", F.lit(value_type))
-        )
-
-    new_index = parts[0]
-    for p in parts[1:]:
-        new_index = new_index.unionByName(p)
-    staging = f"{ipath}__staging"
-    new_index.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-    return {"added": len(added), "removed": len(removed), "total": len(current)}
+    out = _refresh(spark, path, bloom=[(column, ipath, (1 << 20, 5), False)])
+    return out[f"bloom:{column}"]
 
 
 def bloom_prune(
@@ -239,31 +177,30 @@ def bloom_prune(
 
     No false negatives: every file actually holding one of the values
     survives. False positives at the sidecar's configured rate. Files
-    newer than the index are kept unseen (conservative).
+    the sidecar does not know (newer than the index, or rewritten in
+    place) are kept unseen (conservative).
     """
     quote_identifier(column)  # raises on non-identifier names
-    from pydala2_spark.plans.fs import list_files, path_exists, qualified
+    from pydala2_spark.plans.fs import path_exists
+    from pydala2_spark.plans.stats import _known, _parquet_listing
 
     path = dataset_path.rstrip("/")
     ipath = index_path or _bloom_sidecar_path(path, column)
-    # schemeless form keys all comparisons; originals are what the
-    # caller can hand back to spark.read.parquet
-    current = {
-        _schemeless(qualified(spark, f)): f
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    }
+    listing = _parquet_listing(spark, path)
     if not path_exists(spark, ipath):
-        return sorted(current.values())  # no index → no pruning
+        return list(listing)  # no index → no pruning
     if not values:
         return []
 
     idx = spark.read.parquet(ipath)
-    first = idx.select("num_bits", "num_hashes", "value_type").first()
-    num_bits, num_hashes, value_type = first["num_bits"], first["num_hashes"], first["value_type"]
-
-    indexed = {r["file_path"] for r in idx.select("file_path").distinct().collect()}
-    unknown = [orig for key, orig in current.items() if key not in indexed]
-
+    recorded, geometry = _sentinels(idx)
+    _, unknown, _ = _known(listing, None, recorded)
+    if geometry is None:
+        return unknown
+    num_bits, num_hashes, value_type = geometry
+    # schemeless form keys all comparisons; originals are what the
+    # caller can hand back to spark.read.parquet
+    known = {_schemeless(p): p for p in set(listing) - set(unknown)}
     # probe values must hash EXACTLY as the build side did, so they
     # must enter the plan in the column's native type. Direct typed
     # construction handles every type faithfully (bytes → binary —
@@ -298,9 +235,7 @@ def bloom_prune(
         .select("file_path")
         .distinct()
     )
-    candidates = [
-        current[r["file_path"]] for r in hits.collect() if r["file_path"] in current
-    ]
+    candidates = [known[r["file_path"]] for r in hits.collect() if r["file_path"] in known]
     return sorted(set(candidates) | set(unknown))
 
 
@@ -311,9 +246,10 @@ def read_bloom_pruned(
     values: list,
     index_path: str | None = None,
 ) -> DataFrame:
-    """Scan only the bloom-surviving files; the caller still applies
-    the row-level ``isin`` filter (pruning is file-granular)."""
+    """Scan only the bloom-surviving files (under ``basePath``, so hive
+    partition columns stay); the caller still applies the row-level
+    ``isin`` filter (pruning is file-granular)."""
+    from pydala2_spark.plans.stats import _read_survivors
+
     files = bloom_prune(spark, dataset_path, column, values, index_path)
-    if not files:
-        return spark.read.parquet(dataset_path).limit(0)
-    return spark.read.parquet(*files)
+    return _read_survivors(spark, dataset_path.rstrip("/"), files)

@@ -225,10 +225,11 @@ class Catalog:
         """Build (or incrementally refresh) the table's skipping
         sidecars in place: the min/max StatsIndex always, plus bloom
         membership filters and HLL NDV sketches for the named columns.
-        Re-running after appends costs only the appended files (each
-        sidecar follows the StatsIndex incremental discipline), and a
-        newly requested NDV column extends the tracked set — the
-        catalog-level ANALYZE a warehouse would run after ingest.
+        Re-running after appends costs only the appended (or rewritten)
+        files — every sidecar is diffed against one listing by the one
+        sidecar core — and a newly requested NDV column extends the
+        tracked set: the catalog-level ANALYZE a warehouse would run
+        after ingest.
 
         Entries with a ``filesystem:`` profile resolve exactly as
         ``load`` does (credentials + scheme rewrite); the sidecars are
@@ -238,10 +239,12 @@ class Catalog:
         ``SnapshotDataset.read_pruned`` / ``collect_file_stats(files=
         manifest)`` for version-scoped skipping instead.
 
-        All bloom/NDV branches share ONE data scan of the files still
-        needing indexing (:func:`pydala2_spark.plans.analyze.
-        analyze_dataset`) — an analyze after an append reads the
-        appended data once, however many columns are indexed.
+        This is :func:`pydala2_spark.plans.analyze.analyze_dataset`,
+        the same refresh the single-sidecar builders and the
+        write-through ``update_metadata=True`` run: all bloom/NDV
+        branches share ONE data scan of the files still needing
+        indexing, so an analyze after an append reads the appended
+        data once, however many columns are indexed.
         """
         from pydala2_spark.plans.analyze import analyze_dataset
 

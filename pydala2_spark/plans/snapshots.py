@@ -859,12 +859,15 @@ class SnapshotDataset:
     def read_pruned(
         self, column: str, lo=None, hi=None, version: int | None = None
     ) -> DataFrame:
-        """Version-pinned file-pruned scan: footer-scan ONLY this
-        version's manifest files (distributed), drop files whose
-        min/max prove no row matches [lo, hi], and read the survivors.
-        Time travel and file skipping compose — the caller still
-        applies the row-level filter (pruning is conservative)."""
-        from pydala2_spark.plans.stats import collect_file_stats, prune_files
+        """Version-pinned file-pruned scan over ONLY this version's
+        manifest files: stats from the shared pruned-read source
+        (StatsIndex rows for files a directory index knows by path and
+        size, footers for the rest — all of them without an index),
+        drop files whose min/max prove no row matches [lo, hi], and
+        read the survivors. Time travel and file skipping compose —
+        the caller still applies the row-level filter (pruning is
+        conservative)."""
+        from pydala2_spark.plans.stats import _pruned_files, _read_survivors
 
         if version is None:
             version = self.current_version()
@@ -874,11 +877,8 @@ class SnapshotDataset:
         if not m["files"]:
             return self.read(version)
         abs_files = [f"{self.path}/{rel}" for rel in m["files"]]
-        stats = collect_file_stats(self.spark, self.path, files=abs_files)
-        keep = prune_files(stats, column, lo, hi)
-        if not keep:
-            return self.read(version).limit(0)
-        return self.spark.read.option("basePath", self.path).parquet(*keep)
+        keep = _pruned_files(self.spark, self.path, column, lo, hi, files=abs_files)
+        return _read_survivors(self.spark, self.path, keep, lambda: self.read(version))
 
     # -- rollback ---------------------------------------------------------
 

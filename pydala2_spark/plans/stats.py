@@ -1,4 +1,5 @@
-"""Per-file statistics table — footer-only, collected as a Spark job.
+"""Per-file statistics table — footer-only — and the helpers of the
+one sidecar core.
 
 The reference maintains two metadata sidecars per dataset and a DuckDB
 ``metadata_table`` view with one row per row-group carrying per-column
@@ -16,12 +17,21 @@ groups natively, so the stats table here serves the two remaining jobs:
    only survivors avoids even opening the losers' footers. That is
    `prune_files` + `read_pruned` below.
 
-Footers are read on the EXECUTORS (``mapPartitions`` over the file
-list), never the driver — at 1M files this is a 1M-task-free, evenly
-distributed metadata scan; the result is small (one row per file) and
-can itself be persisted as a parquet "stats dataset" and refreshed
-incrementally after writes, like the reference's
-``update_file_metadata`` (`pydala/metadata.py:398-439`).
+Every skipping sidecar (this StatsIndex, the bloom filters of
+:mod:`pydala2_spark.plans.bloom`, the NDV sketches below) follows ONE
+membership rule, :func:`_known`: a file is known to a sidecar when the
+sidecar records its path with the same size; unknown files are never
+skipped. Every sidecar is refreshed by the one core in
+:mod:`pydala2_spark.plans.analyze` and published through
+:func:`_publish_sidecar`. Every pruned read takes its stats from
+:func:`_pruned_files` — index rows for the files the StatsIndex knows,
+footers (:func:`collect_file_stats`) for the rest — and returns
+through :func:`_read_survivors`.
+
+Footers of up to 32 files are read on the driver; larger sets are read
+on the EXECUTORS (``mapPartitions`` over the file list) — at 1M files
+an evenly distributed metadata scan whose result is small (one row per
+file).
 """
 
 from __future__ import annotations
@@ -180,38 +190,48 @@ def _read_footer(path: str, registry: dict | None = None):
     return md, size
 
 
+def _stats_row(base: str, path: str, size: int, md) -> tuple:
+    """One STATS_SCHEMA row from a file's parquet ``FileMetaData``:
+    per-column min/max/nulls folded over its row groups."""
+    col_stats: dict[str, dict] = {}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            c = g.column(ci)
+            s = c.statistics
+            if s is None or not s.has_min_max:
+                continue
+            cur = col_stats.setdefault(c.path_in_schema, {"min": None, "max": None, "nulls": 0})
+            if cur["min"] is None or s.min < cur["min"]:
+                cur["min"] = s.min
+            if cur["max"] is None or s.max > cur["max"]:
+                cur["max"] = s.max
+            cur["nulls"] += s.null_count or 0
+    return (
+        path,
+        size,
+        int(md.num_rows),
+        int(md.num_row_groups),
+        _hive_partitions(base, path),
+        {
+            k: (_stat_value(v["min"]), _stat_value(v["max"]), int(v["nulls"]))
+            for k, v in col_stats.items()
+        },
+        md.schema.to_arrow_schema().to_string(),
+    )
+
+
 def _read_footers(base: str, paths: Iterable[str], registry: dict | None = None):
-    """Executor-side: read parquet footers only (no data pages)."""
+    """Read parquet footers only (no data pages), one stats row each."""
     for p in paths:
         md, size = _read_footer(p, registry)
-        col_stats: dict[str, dict] = {}
-        arrow_schema = md.schema.to_arrow_schema()
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                name = c.path_in_schema
-                s = c.statistics
-                if s is None or not s.has_min_max:
-                    continue
-                cur = col_stats.setdefault(name, {"min": None, "max": None, "nulls": 0})
-                if cur["min"] is None or s.min < cur["min"]:
-                    cur["min"] = s.min
-                if cur["max"] is None or s.max > cur["max"]:
-                    cur["max"] = s.max
-                cur["nulls"] += s.null_count or 0
-        yield (
-            p,
-            size,
-            int(md.num_rows),
-            int(md.num_row_groups),
-            _hive_partitions(base, p),
-            {
-                k: (_stat_value(v["min"]), _stat_value(v["max"]), int(v["nulls"]))
-                for k, v in col_stats.items()
-            },
-            arrow_schema.to_string(),
-        )
+        yield _stats_row(base, p, size, md)
+
+
+#: footer sets up to this size are read on the driver: footers are
+#: kilobytes, and the small append of a write-through refresh skips a
+#: whole parallelize/mapPartitions job round-trip
+_DRIVER_FOOTERS = 32
 
 
 def collect_file_stats(
@@ -220,10 +240,11 @@ def collect_file_stats(
     parallelism: int | None = None,
     files: list[str] | None = None,
 ) -> DataFrame:
-    """Build the stats table for a parquet dataset with a distributed
-    footer scan. One output row per data file. ``files`` restricts the
-    scan to an explicit subset (e.g. one snapshot version's manifest)
-    instead of the directory listing."""
+    """Build the stats table for a parquet dataset from its footers.
+    One output row per data file. ``files`` restricts the scan to an
+    explicit subset (e.g. one snapshot version's manifest, or the files
+    a sidecar does not know) instead of the directory listing. Up to
+    32 footers are read on the driver, more on the executors."""
     from pydala2_spark.plans.fs import list_files
 
     if files is None:
@@ -231,6 +252,9 @@ def collect_file_stats(
     if not files:
         return spark.createDataFrame([], STATS_SCHEMA)
     base = path if "://" in path else "file:" + os.path.abspath(path.removeprefix("file:"))
+    if len(files) <= _DRIVER_FOOTERS:
+        rows = list(_read_footers(base, files, dict(_SCHEME_FILESYSTEMS)))
+        return spark.createDataFrame(rows, STATS_SCHEMA)
     n = parallelism or min(len(files), spark.sparkContext.defaultParallelism)
     rdd = spark.sparkContext.parallelize(files, n).mapPartitions(
         # registry captured BY VALUE: executors re-import this module
@@ -287,6 +311,125 @@ def prune_files(
     return [r["file_path"] for r in s.filter(keep | cond).select("file_path").collect()]
 
 
+# -- the sidecar core's shared helpers -------------------------------------
+
+
+def _parquet_listing(spark: SparkSession, path: str) -> dict[str, int]:
+    """``{listing path: size}`` of the dataset's visible parquet files —
+    ONE walk gives a refresh or a pruned read both the file set and the
+    sizes the membership rule compares."""
+    from pydala2_spark.plans.fs import iter_file_statuses
+
+    return dict(
+        sorted((p, s) for p, s, _ in iter_file_statuses(spark, path) if p.endswith(".parquet"))
+    )
+
+
+def _known(listing: dict, old: DataFrame | None, recorded: dict):
+    """THE membership rule of every skipping sidecar. A listed file is
+    known when the sidecar records its (schemeless) path with the same
+    size; a recorded size of ``None`` — the NDV sketches — matches on
+    the path alone. A file rewritten in place keeps its path but not
+    its size, so it is NOT known: the sidecar describes contents that
+    are gone.
+
+    ``listing`` maps paths to sizes, ``recorded`` maps the sidecar's
+    schemeless paths to recorded sizes. Returns ``(rows, unknown,
+    gone)``: ``old`` restricted to the known files (None stays None),
+    the listed files the sidecar does not know — never skipped: a
+    pruned read footer-reads them, a refresh derives their rows — and
+    the recorded paths that are not known (deleted or rewritten)."""
+    from pydala2_spark.plans.fs import schemeless, schemeless_col
+
+    known, unknown = set(), []
+    for p, size in listing.items():
+        k = schemeless(p)
+        if k in recorded and recorded[k] in (None, size):
+            known.add(k)
+        else:
+            unknown.append(p)
+    gone = sorted(set(recorded) - known)
+    if old is not None and gone:
+        old = old.filter(~schemeless_col(F.col("file_path")).isin(gone))
+    return old, unknown, gone
+
+
+def _index_sizes(rows: DataFrame) -> dict:
+    """``{schemeless path: size_bytes}`` a StatsIndex records."""
+    from pydala2_spark.plans.fs import schemeless
+
+    return {schemeless(r[0]): r[1] for r in rows.select("file_path", "size_bytes").collect()}
+
+
+def _union(spark: SparkSession, parts: list, schema) -> DataFrame:
+    out = parts[0] if parts else spark.createDataFrame([], schema)
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _publish_sidecar(df: DataFrame, ipath: str) -> None:
+    """The one staged sidecar publish: write beside the live sidecar,
+    then swap it in (:func:`~pydala2_spark.plans.fs.replace_dir`)."""
+    from pydala2_spark.plans.fs import replace_dir
+
+    staging = f"{ipath}__staging"
+    df.write.mode("overwrite").parquet(staging)
+    replace_dir(df.sparkSession, staging, ipath)
+
+
+def _publish_stats_index(rows: DataFrame, ipath: str) -> None:
+    # repartition(1), NOT coalesce(1): coalescing a plan whose leaves
+    # include driver-local rows makes ONE task iterate every
+    # pickled slice through the Python gateway — measured 4.2 s for
+    # a 4-row index vs 0.5 s through the shuffle (r9); the shuffle
+    # moves kilobytes here
+    _publish_sidecar(rows.repartition(1), ipath)
+
+
+def _pruned_files(
+    spark: SparkSession,
+    root: str,
+    column: str,
+    lo=None,
+    hi=None,
+    files: list[str] | None = None,
+    index_path: str | None = None,
+    stats: DataFrame | None = None,
+) -> list[str]:
+    """Survivors of min/max pruning among ``files`` (default: the
+    dataset listing). Stats come from one source: the StatsIndex row
+    of every file the index knows (:func:`_known`), a footer read of
+    every other. With no index that is a footer scan of every file;
+    with a fresh index no footer is read. Reading never creates an
+    index. An explicit ``stats`` frame skips the lookup."""
+    if stats is None:
+        idx = StatsIndex(spark, root, index_path)
+        if not idx.exists():
+            stats = collect_file_stats(spark, root, files=files)
+        else:
+            from pydala2_spark.plans.fs import schemeless
+
+            listing = _parquet_listing(spark, root)
+            if files is not None:
+                size = {schemeless(p): s for p, s in listing.items()}
+                listing = {f: size.get(schemeless(f)) for f in files}
+            rows = spark.read.schema(STATS_SCHEMA).parquet(idx.index_path)
+            stats, unknown, _ = _known(listing, rows, _index_sizes(rows))
+            if unknown:
+                stats = stats.unionByName(collect_file_stats(spark, root, files=unknown))
+    return prune_files(stats, column, lo, hi)
+
+
+def _read_survivors(spark: SparkSession, root: str, files: list[str], empty=None) -> DataFrame:
+    """The one return path of every pruned read: the surviving files
+    under ``basePath`` (hive partition columns stay), or — nothing
+    survived — ``empty()`` (default: the root read) with no rows."""
+    if files:
+        return spark.read.option("basePath", root).parquet(*files)
+    return (empty() if empty else spark.read.parquet(root)).limit(0)
+
+
 class StatsIndex:
     """Persistent, incrementally-refreshed stats table — the Spark
     rebirth of the reference's metadata-sidecar lifecycle
@@ -296,9 +439,10 @@ class StatsIndex:
     The index lives as parquet under ``<dataset>/_stats_index`` (the
     leading underscore hides it from Spark's file listing, exactly like
     the reference's ``_metadata`` sidecar convention). ``refresh()``
-    footer-scans ONLY files added since the last refresh — at 100 TB
-    with millions of files, a refresh after an append touches just the
-    appended files' footers, distributed across executors.
+    runs the shared sidecar core and footer-scans ONLY files added (or
+    rewritten) since the last refresh — at 100 TB with millions of
+    files, a refresh after an append touches just the appended files'
+    footers.
     """
 
     def __init__(self, spark: SparkSession, dataset_path: str, index_path: str | None = None):
@@ -321,82 +465,30 @@ class StatsIndex:
     def refresh(self) -> dict:
         """Bring the index in sync with the physical file list.
         Returns ``{"added": n, "removed": m, "total": k}``; only the
-        added files' footers are read."""
-        from pydala2_spark.plans.fs import list_files, replace_dir
+        added files' footers are read. A file rewritten in place counts
+        as both removed and added."""
+        from pydala2_spark.plans.analyze import _refresh
 
-        current = set(list_files(self.spark, self.dataset_path, suffixes=(".parquet",)))
-        if self.exists():
-            old = self.spark.read.schema(STATS_SCHEMA).parquet(self.index_path)
-            indexed = {r["file_path"] for r in old.select("file_path").collect()}
-        else:
-            old, indexed = None, set()
-
-        added = sorted(current - indexed)
-        removed = indexed - current
-
-        base = (
-            self.dataset_path
-            if "://" in self.dataset_path
-            else "file:" + os.path.abspath(self.dataset_path.removeprefix("file:"))
-        )
-        parts = []
-        if old is not None and (indexed - removed):
-            parts.append(old.filter(~F.col("file_path").isin(list(removed)) if removed else F.lit(True)))
-        if added:
-            if len(added) <= 32:
-                # small append (the write-through common case): footers
-                # are kilobytes — reading them on the driver skips a
-                # whole parallelize/mapPartitions job round-trip
-                rows = list(_read_footers(base, added, dict(_SCHEME_FILESYSTEMS)))
-                parts.append(self.spark.createDataFrame(rows, STATS_SCHEMA))
-            else:
-                n = min(len(added), self.spark.sparkContext.defaultParallelism)
-                rdd = self.spark.sparkContext.parallelize(added, n).mapPartitions(
-                    lambda it, b=base, reg=dict(_SCHEME_FILESYSTEMS): _read_footers(
-                        b, it, reg
-                    )
-                )
-                parts.append(self.spark.createDataFrame(rdd, STATS_SCHEMA))
-        new_index = parts[0] if parts else self.spark.createDataFrame([], STATS_SCHEMA)
-        for p in parts[1:]:
-            new_index = new_index.unionByName(p)
-
-        staging = f"{self.index_path}__staging"
-        # repartition(1), NOT coalesce(1): coalescing a plan whose leaves
-        # include driver-local rows makes ONE task iterate every
-        # pickled slice through the Python gateway — measured 4.2 s for
-        # a 4-row index vs 0.5 s through the shuffle (r9); the shuffle
-        # moves kilobytes here
-        new_index.repartition(1).write.mode("overwrite").parquet(staging)
-        replace_dir(self.spark, staging, self.index_path)
-        return {"added": len(added), "removed": len(removed), "total": len(current)}
+        return _refresh(self.spark, self.dataset_path, stats_index=self.index_path)["stats"]
 
     def prune(self, column: str, lo=None, hi=None) -> list[str]:
         """Index-side survivors only — files the INDEX cannot rule
-        out. Files the index has never seen are not returned here;
+        out. Files the index does not know are not returned here;
         ``read_pruned`` adds them back (staleness-safe reads)."""
         return prune_files(self.stats(), column, lo, hi)
 
     def read_pruned(self, column: str, lo=None, hi=None) -> DataFrame:
-        """Pruned scan that is SAFE under a stale index: survivors
-        from the min/max sidecar, UNIONED with every live file the
-        index has not seen (one extra directory listing — metadata
-        cost). A file missing from the sidecar (append since the last
-        refresh, or a lost write-through race) is scanned, never
-        silently skipped — the same unknown ⇒ keep rule prune_files
-        applies to missing column stats, applied at the file level.
-        Rows outside [lo, hi] still need the caller's row filter."""
-        from pydala2_spark.plans.fs import list_files
-
-        files = set(self.prune(column, lo, hi))
-        indexed = {
-            r["file_path"] for r in self.stats().select("file_path").collect()
-        }
-        current = list_files(self.spark, self.dataset_path, suffixes=(".parquet",))
-        files.update(f for f in current if f not in indexed)
-        if not files:
-            return self.spark.read.parquet(self.dataset_path).limit(0)
-        return self.spark.read.parquet(*sorted(files))
+        """Pruned scan that is SAFE under a stale index: index rows for
+        the files it knows, footers for every live file it does not
+        (appended since the last refresh, rewritten in place, or a lost
+        write-through race) — such a file is pruned on its own footer,
+        never silently skipped. Without an index this is a footer scan;
+        no index is created. Rows outside [lo, hi] still need the
+        caller's row filter."""
+        files = _pruned_files(
+            self.spark, self.dataset_path, column, lo, hi, index_path=self.index_path
+        )
+        return _read_survivors(self.spark, self.dataset_path, files)
 
 
 def import_legacy_file_metadata(
@@ -431,7 +523,7 @@ def import_legacy_file_metadata(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pydala2_spark.plans.fs import path_exists, qualified, replace_dir
+    from pydala2_spark.plans.fs import path_exists, qualified
 
     dataset_path = dataset_path.rstrip("/")
     sidecar = f"{dataset_path}/_file_metadata"
@@ -483,43 +575,10 @@ def import_legacy_file_metadata(
         if finfo.type == _pafs.FileType.NotFound:
             missing += 1
             continue
-        col_stats: dict[str, dict] = {}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                s = c.statistics
-                if s is None or not s.has_min_max:
-                    continue
-                cur = col_stats.setdefault(
-                    c.path_in_schema, {"min": None, "max": None, "nulls": 0}
-                )
-                if cur["min"] is None or s.min < cur["min"]:
-                    cur["min"] = s.min
-                if cur["max"] is None or s.max > cur["max"]:
-                    cur["max"] = s.max
-                cur["nulls"] += s.null_count or 0
-        rows.append(
-            (
-                qpath,
-                int(finfo.size),
-                int(md.num_rows),
-                int(md.num_row_groups),
-                _hive_partitions(base, qpath),
-                {
-                    k: (_stat_value(v["min"]), _stat_value(v["max"]), int(v["nulls"]))
-                    for k, v in col_stats.items()
-                },
-                md.schema.to_arrow_schema().to_string(),
-            )
-        )
+        rows.append(_stats_row(base, qpath, int(finfo.size), md))
 
     idx = StatsIndex(spark, dataset_path, index_path)
-    staging = f"{idx.index_path}__staging"
-    spark.createDataFrame(rows, STATS_SCHEMA).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(staging)  # repartition not coalesce: see StatsIndex.refresh
-    replace_dir(spark, staging, idx.index_path)
+    _publish_stats_index(spark.createDataFrame(rows, STATS_SCHEMA), idx.index_path)
     return {"imported": len(rows), "missing": missing}
 
 
@@ -649,13 +708,14 @@ def read_pruned(
     [lo, hi] — the reference's ``ParquetDataset.scan``
     (`pydala/dataset.py:1200-1246`) rebuilt on a Spark file subset.
 
-    The returned DataFrame still needs the row-level filter applied by
-    the caller (pruning is conservative, file granularity)."""
-    st = stats if stats is not None else collect_file_stats(spark, path)
-    files = prune_files(st, column, lo, hi)
-    if not files:
-        return spark.read.parquet(path).limit(0)
-    return spark.read.parquet(*files)
+    Stats come from the StatsIndex for the files it knows and from
+    footers for the rest (all of them when there is no index); an
+    explicit ``stats`` frame is used as given. Survivors are read under
+    ``basePath``, so hive partition columns stay. The returned
+    DataFrame still needs the row-level filter applied by the caller
+    (pruning is conservative, file granularity)."""
+    files = _pruned_files(spark, path, column, lo, hi, stats=stats)
+    return _read_survivors(spark, path, files)
 
 
 # -- mergeable NDV sketches -------------------------------------------------
@@ -677,46 +737,13 @@ def build_ndv_sketches(
     sidecar (``StatsIndex``) answers range questions; this answers
     cardinality questions (compaction sizing, dictionary-encoding
     decisions, join-side estimation) at the same metadata scale.
+    A build is the sidecar core's refresh with no old sidecar.
     """
-    from pydala2_spark.functions.safety import quote_identifier
-    from pydala2_spark.plans.fs import replace_dir
+    from pydala2_spark.plans.analyze import _refresh
 
-    for c in columns:
-        quote_identifier(c)
     path = dataset_path.rstrip("/")
     ipath = index_path or ndv_sidecar_path(path)
-
-    df = spark.read.parquet(path)
-    from pydala2_spark.plans.fs import schemeless_col
-
-    fp = schemeless_col(F.input_file_name())
-    parts = None
-    for c in columns:
-        p = (
-            df.select(fp.alias("file_path"), F.col(c).alias("__v"))
-            .groupBy("file_path")
-            .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("sketch"))
-            .select("file_path", F.lit(c).alias("column"), "sketch")
-        )
-        parts = p if parts is None else parts.unionByName(p)
-    # marker row (column="") per PHYSICAL file: a zero-row file emits
-    # no group above, and without a membership record the staleness
-    # guard in estimate_ndv would flag it forever
-    from pydala2_spark.plans.fs import list_files as _lf
-    from pydala2_spark.plans.fs import qualified as _q
-    from pydala2_spark.plans.fs import schemeless as _sl
-
-    phys = [_sl(_q(spark, f)) for f in _lf(spark, path, suffixes=(".parquet",))]
-    markers = spark.createDataFrame(
-        [(f, "") for f in phys], "file_path string, column string"
-    ).withColumn("sketch", F.lit(None).cast("binary"))
-    out = parts.unionByName(markers).withColumn("lg_k", F.lit(lg_k))
-
-    staging = f"{ipath}__staging"
-    out.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-    n = spark.read.parquet(ipath).filter(F.col("column") != "").count()
-    return {"rows": n, "files": len(phys), "columns": list(columns)}
+    return _refresh(spark, path, ndv=(ipath, list(columns), lg_k, True))["ndv"]
 
 
 def ndv_sidecar_path(dataset_path: str) -> str:
@@ -733,101 +760,19 @@ def refresh_ndv_sketches(
     last build/refresh (for every column the sidecar already tracks),
     drop rows of removed files. Keeps ``estimate_ndv``'s staleness
     guard satisfied after appends without rescanning the corpus.
+    Sketches are keyed by path alone: a file rewritten in place keeps
+    its old sketch until a rebuild.
 
     ``columns`` EXTENDS the tracked set: a requested column the sidecar
     doesn't hold yet is sketched over ALL current files (one extra
     full-column scan, once) — without this, asking for a new column
     would silently yield estimates of zero forever.
     Returns ``{"added": n, "removed": m, "total": k, "new_columns": c}``."""
-    from pydala2_spark.plans.fs import (
-        list_files,
-        qualified,
-        replace_dir,
-        schemeless,
-        schemeless_col,
-    )
-
-    from pydala2_spark.plans.fs import path_exists
+    from pydala2_spark.plans.analyze import _refresh
 
     path = dataset_path.rstrip("/")
     ipath = index_path or ndv_sidecar_path(path)
-    if not path_exists(spark, ipath):
-        raise ValueError(
-            f"no NDV sidecar at {ipath!r}; run build_ndv_sketches(spark, "
-            f"path, columns=[...]) first (a refresh cannot know which "
-            f"columns to sketch)"
-        )
-    old = spark.read.parquet(ipath)
-    first = old.select("lg_k").first()
-    if first is None:
-        raise ValueError(
-            f"NDV sidecar at {ipath!r} is empty; re-run build_ndv_sketches"
-        )
-    lg_k = int(first["lg_k"])
-    tracked = [
-        r["column"] for r in old.select("column").distinct().collect() if r["column"]
-    ]
-    new_columns = [c for c in (columns or []) if c not in tracked]
-    indexed = {r["file_path"] for r in old.select("file_path").distinct().collect()}
-    current = {
-        schemeless(qualified(spark, f)): f
-        for f in list_files(spark, path, suffixes=(".parquet",))
-    }
-    added = sorted(k for k in current if k not in indexed)
-    removed = indexed - set(current)
-
-    parts = [old.filter(~F.col("file_path").isin(list(removed)) if removed else F.lit(True))]
-    if new_columns and current:
-        # new columns need sketches for EVERY current file, not just
-        # the appended ones
-        all_df = spark.read.parquet(*current.values())
-        fp_all = schemeless_col(F.input_file_name())
-        for c in new_columns:
-            parts.append(
-                all_df.select(fp_all.alias("file_path"), F.col(c).alias("__v"))
-                .groupBy("file_path")
-                .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("sketch"))
-                .select(
-                    "file_path",
-                    F.lit(c).alias("column"),
-                    "sketch",
-                    F.lit(lg_k).alias("lg_k"),
-                )
-            )
-    if added:
-        df = spark.read.parquet(*[current[k] for k in added])
-        fp = schemeless_col(F.input_file_name())
-        for c in tracked:
-            parts.append(
-                df.select(fp.alias("file_path"), F.col(c).alias("__v"))
-                .groupBy("file_path")
-                .agg(F.hll_sketch_agg("__v", F.lit(lg_k)).alias("sketch"))
-                .select(
-                    "file_path",
-                    F.lit(c).alias("column"),
-                    "sketch",
-                    F.lit(lg_k).alias("lg_k"),
-                )
-            )
-        parts.append(
-            spark.createDataFrame(
-                [(k, "") for k in added], "file_path string, column string"
-            )
-            .withColumn("sketch", F.lit(None).cast("binary"))
-            .withColumn("lg_k", F.lit(lg_k))
-        )
-    new_index = parts[0]
-    for p in parts[1:]:
-        new_index = new_index.unionByName(p)
-    staging = f"{ipath}__staging"
-    new_index.write.mode("overwrite").parquet(staging)
-    replace_dir(spark, staging, ipath)
-    return {
-        "added": len(added),
-        "removed": len(removed),
-        "total": len(current),
-        "new_columns": new_columns,
-    }
+    return _refresh(spark, path, ndv=(ipath, list(columns or []), None, False))["ndv"]
 
 
 def estimate_ndv(

@@ -510,8 +510,11 @@ class ParquetDataset(BaseDataset):
     footer-free loading and min/max file pruning
     (`pydala/metadata.py:261-396`). Spark's Parquet source already
     caches file listings and prunes row groups from footers; the
-    100 TB-scale file-level analogue is the optional stats table in
-    :mod:`pydala2_spark.plans.stats`.
+    100 TB-scale file-level analogue is the optional sidecar set — the
+    min/max StatsIndex, bloom filters and NDV sketches — kept by the one
+    sidecar core (:mod:`pydala2_spark.plans.analyze`: one refresh, one
+    membership rule by path and size). :meth:`scan`, :meth:`scan_point`
+    and :meth:`explain_pruning` read through the same sidecars.
     """
 
     format = "parquet"
@@ -606,8 +609,11 @@ class ParquetDataset(BaseDataset):
         return dataset_stats(self.spark, self.path)
 
     def scan(self, column: str, lo=None, hi=None) -> DataFrame:
-        """File-pruned scan on min/max stats (`pydala/dataset.py:1200-1246`);
-        caller still applies the row-level filter."""
+        """File-pruned scan on min/max stats (`pydala/dataset.py:1200-1246`):
+        the StatsIndex supplies the stats of the files it knows when one
+        exists, footers supply the rest (every file without an index).
+        Survivors keep their hive partition columns; the caller still
+        applies the row-level filter."""
         from pydala2_spark.plans.stats import read_pruned
 
         return read_pruned(self.spark, self.path, column, lo, hi)
@@ -660,23 +666,19 @@ class ParquetDataset(BaseDataset):
         you ANALYZE". Metadata-only — no data files are opened.
         """
         from pydala2_spark.plans.bloom import _bloom_sidecar_path, bloom_prune
-        from pydala2_spark.plans.fs import list_files, path_exists, schemeless
-        from pydala2_spark.plans.stats import StatsIndex
+        from pydala2_spark.plans.fs import path_exists, schemeless
+        from pydala2_spark.plans.stats import StatsIndex, _index_sizes, _known, _parquet_listing
 
-        total = list_files(self.spark, self.path, suffixes=(".parquet",))
-        keep = {schemeless(f) for f in total}
+        listing = _parquet_listing(self.spark, self.path)
+        keep = {schemeless(f) for f in listing}
         stats_kept = bloom_kept = None
         idx = StatsIndex(self.spark, self.path)
         if (lo is not None or hi is not None) and idx.exists():
-            kept = {schemeless(f) for f in idx.prune(column, lo, hi)}
-            # conservative like bloom_prune: files the (possibly stale)
-            # index has NO row for cannot be proven skippable — a file
-            # appended after the last refresh must report as scanned
-            indexed = {
-                schemeless(r["file_path"])
-                for r in idx.stats().select("file_path").collect()
-            }
-            kept |= keep - indexed
+            # the one membership rule: files the (possibly stale) index
+            # does not know by path and size cannot be proven skippable
+            _, unknown, _ = _known(listing, None, _index_sizes(idx.stats()))
+            kept = {schemeless(f) for f in idx.prune(column, lo, hi)} & keep
+            kept |= {schemeless(f) for f in unknown}
             stats_kept = len(kept)
             keep &= kept
         if values is not None and path_exists(
@@ -688,7 +690,7 @@ class ParquetDataset(BaseDataset):
             }
             bloom_kept = len(kept)
             keep &= kept
-        n = len(total)
+        n = len(listing)
         return {
             "total_files": n,
             "stats_kept": stats_kept,
